@@ -60,7 +60,7 @@ object Bench {
 
   /** Materialize the bench corpus once (outside any timed window); both
     * parallelism levels read the identical parquet input. `private[graft]`
-    * so the diagnostic tools (GenCorpus/CandProfile/...) materialize the
+    * so the diagnostic tools (GenCorpus/DedupRunOne/...) materialize the
     * SAME corpus contract (path scheme, seed, write settings) instead of
     * duplicating it.
     */

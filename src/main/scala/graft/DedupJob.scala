@@ -23,6 +23,7 @@ import graft.kernel.GraftConfig
   *     [--decontam-n N]              gram length for it (default 13)
   *     [--text-only]                 trust the text column (skip extraction)
   *     [--jaccard-verify]            exact k-gram Jaccard after signature verify
+  *                                   (not with --incremental: the probe stores no text)
   *     [--hot-band-prefilter]        two-phase heavy-hitter exclusion
   *     [--max-band-group <n>]        stop-band cap (default 500)
   *
@@ -119,6 +120,8 @@ object DedupJob {
     require(a.decontamN >= 2, s"--decontam-n must be >= 2, got: ${a.decontamN}")
     require(a.incremental.isEmpty || a.checkpoint.nonEmpty,
       "--incremental requires --checkpoint (the persisted index lives there)")
+    require(!a.opts.jaccardVerify || a.incremental.isEmpty,
+      "--jaccard-verify needs document text, which the --incremental probe does not store")
     require(!a.stream || a.checkpoint.nonEmpty,
       "--stream requires --checkpoint (streaming state + source progress live there)")
     require(!a.stream || a.incremental.isEmpty,

@@ -13,6 +13,9 @@ final class Bands(cfg: GraftConfig) extends Serializable {
   // projection is derived deterministically from the band seed; safe to
   // recompute per executor (small: numBands × bandSize ints)
   @transient private lazy val projection: Array[Array[Int]] = cfg.bandProjection
+  // decimal bytes of the widest band: every int takes ≤ MaxIntChars
+  @transient private lazy val scratchBytes: Int =
+    projection.foldLeft(0)((m, idx) => math.max(m, idx.length)) * Bands.MaxIntChars
 
   /** bandId -> 64-bit band hash from an unpacked signature: the LOW 32
     * bits are exactly the reference's `MinHash.hashData(list, 0)` value
@@ -30,7 +33,7 @@ final class Bands(cfg: GraftConfig) extends Serializable {
   def bandHashes(sig: Array[Int]): Array[Long] = {
     val proj = projection
     val out = new Array[Long](proj.length)
-    val buf = Bands.scratch.get()
+    val buf = Bands.scratch(scratchBytes)
     var b = 0
     while (b < proj.length) {
       val idx = proj(b)
@@ -49,16 +52,24 @@ final class Bands(cfg: GraftConfig) extends Serializable {
 }
 
 object Bands {
-  /** Per-thread decimal scratch: band strings are ≤ bandSize × 11 ASCII
-    * bytes; 1 KiB covers every configured geometry with a wide margin (the
-    * writer still bounds-checks via the caller contract below). */
-  private val scratch = new ThreadLocal[Array[Byte]] {
+  /** Longest decimal form of an Int: "-2147483648". */
+  private val MaxIntChars = 11
+
+  private val scratchLocal = new ThreadLocal[Array[Byte]] {
     override def initialValue(): Array[Byte] = new Array[Byte](1024)
   }
 
+  /** Per-thread decimal scratch of at least `bytes` bytes, grown on demand
+    * (a band of bandSize ints needs ≤ bandSize × MaxIntChars). */
+  private def scratch(bytes: Int): Array[Byte] = {
+    val cur = scratchLocal.get()
+    if (cur.length >= bytes) cur
+    else { val b = new Array[Byte](bytes); scratchLocal.set(b); b }
+  }
+
   /** Writes `v`'s decimal representation (exactly `Integer.toString`) at
-    * `pos`, returning the new position. Callers must leave ≥ 11 bytes of
-    * headroom per int — bandHashes' 1 KiB scratch vs ≤ ~64-int bands. */
+    * `pos`, returning the new position. Callers must leave ≥ MaxIntChars
+    * bytes of headroom per int — `scratch` is sized from the widest band. */
   private[kernel] def writeIntAscii(buf: Array[Byte], pos: Int, v: Int): Int = {
     var p = pos
     var x = v.toLong // Int.MinValue-safe negation

@@ -106,8 +106,8 @@ object DedupOps {
     * — but the quadratic collision volume collapses to rare-shingle
     * co-occurrences: a df-1000 boilerplate gram sorts last within every
     * doc and almost never reaches a prefix (r4 pinned same-window A/B:
-    * 2× faster than the plain join at sf0.1, see BENCH.md §r4 and
-    * `ngramJaccardAuto` for the measured crossover).
+    * 2× faster than the plain join at sf0.1, see BENCH.md §r4; the plain
+    * join is kept as the test-side reference this variant must equal).
     *
     * Scale: shingles with df > maxPostings (corpus boilerplate) never
     * generate candidates (stop-shingle cap, same policy as LSH
@@ -201,89 +201,6 @@ object DedupOps {
     result
   }
 
-  /** The PLAIN postings self-join alternative to `ngramJaccardPairs`: every
-    * sub-cap shingle generates candidates (no canonical ordering, no prefix
-    * slicing — so no groupBy/sort_array pass), with the same stop-shingle
-    * cap, the same exact-preserving length filter, and the same exact
-    * verification on the full arrays — hence BIT-IDENTICAL output (the
-    * prefix filter is lossless given verification; asserted by test).
-    *
-    * When to use which — the r4 same-window pinned A/B (BENCH.md §r4)
-    * settled the r2/r3 ambiguity: the crossover axis is the EXPECTED
-    * POSTING-COLLISION VOLUME, not vocabulary shape. Plain's join emits
-    * ~Σ_sh df(sh)² rows; prefix's extra df-join + per-doc sort cost ~Σdf.
-    * With E[df of a random posting] = Σdf²/Σdf ≈ 54 (sf0.1) prefix wins
-    * 3.0 s vs 5.9 s; at E[df] ≈ 6 (sf0.01) plain wins 0.6 s vs 1.2 s.
-    * Power-law web text has a boilerplate tail that drives E[df] into the
-    * thousands → prefix, decisively. `ngramJaccardAuto` dispatches on the
-    * one-row E[df] probe.
-    */
-  def ngramJaccardPairsPlain(spark: SparkSession, docs: DataFrame,
-      k: Int = 3, threshold: Double = 0.7, maxPostings: Int = 1000): DataFrame =
-    ngramJaccardPairsPlainFromSets(shingleSets(spark, docs, k), threshold, maxPostings)
-
-  private def ngramJaccardPairsPlainFromSets(sets0: DataFrame,
-      threshold: Double, maxPostings: Int): DataFrame = {
-    val sets = sets0.cache()
-    val postings = sets.select(col("doc_id"), col("set_size"), explode(col("shingles")).as("sh"))
-    val dfTab = postings.groupBy("sh").agg(count(lit(1)).as("df"))
-    // hashed join key under proven vocabulary injectivity — identical
-    // candidates, long vs string exchange (see the prefix variant)
-    val hashed = hashInjectiveOnVocab(dfTab)
-    val keep = postings.join(dfTab.where(col("df") <= maxPostings).select("sh"), Seq("sh"))
-      .select(col("doc_id"), col("set_size"),
-        (if (hashed) xxhash64(col("sh")) else col("sh")).as("sh"))
-    val cand = keep.as("x").join(keep.as("y"),
-        col("x.sh") === col("y.sh") && col("x.doc_id") < col("y.doc_id") &&
-          col("x.set_size") * lit(threshold) <= col("y.set_size") &&
-          col("y.set_size") * lit(threshold) <= col("x.set_size"))
-      .select(col("x.doc_id").as("doc_id_a"), col("y.doc_id").as("doc_id_b"))
-      .distinct()
-    val result = verifyJaccard(cand, sets, threshold,
-      hashed = hashed).localCheckpoint(true)
-    sets.unpersist()
-    result
-  }
-
-  /** Dispatches prefix-filtered vs plain on a one-row probe of
-    * E[df of a random posting] = Σdf²/Σdf — the expected per-posting join
-    * fan-out, i.e. how quadratic the plain join would be. The r4 measured
-    * crossover sits between 6 (plain wins 2×) and 54 (prefix wins 2×);
-    * power-law web boilerplate drives it into the thousands. Cutoff 20 ≈
-    * the geometric middle of the bracketing measurements.
-    */
-  def ngramJaccardAuto(spark: SparkSession, docs: DataFrame,
-      k: Int = 3, threshold: Double = 0.7, maxPostings: Int = 1000,
-      eDfCutoff: Double = 20.0): DataFrame = {
-    // shingle ONCE (the dominant cost of this whole path): the dispatch
-    // stat and the chosen generator share the cached sets
-    val sets = shingleSets(spark, docs, k).cache()
-    val (eDf, _) = statFromSets(sets)
-    val result =
-      if (eDf >= eDfCutoff) ngramJaccardPairsFromSets(sets, threshold, maxPostings)
-      else ngramJaccardPairsPlainFromSets(sets, threshold, maxPostings)
-    // both generators eagerly materialized their output — safe to drop
-    sets.unpersist()
-    result
-  }
-
-  /** (E[df of a random posting] = Σdf²/Σdf, mean df) — the one-row probe
-    * `ngramJaccardAuto` dispatches on. */
-  def ngramJaccardAutoStat(spark: SparkSession, docs: DataFrame, k: Int = 3): (Double, Double) =
-    statFromSets(shingleSets(spark, docs, k))
-
-  private def statFromSets(sets: DataFrame): (Double, Double) = {
-    val postings = sets.select(col("doc_id"), explode(col("shingles")).as("sh"))
-    val stat = postings.groupBy("sh").agg(count(lit(1)).as("df"))
-      .agg((sum(col("df") * col("df")) / sum(col("df"))).as("e_df"),
-        avg("df").as("mean_df"))
-      .collect()(0)
-    // zero postings (empty/degenerate corpus): sums aggregate to null —
-    // report E[df] = 0 so the auto dispatch picks the plain path (both
-    // generators return an empty pair set on empty input)
-    if (stat.isNullAt(0)) (0.0, 0.0) else (stat.getDouble(0), stat.getDouble(1))
-  }
-
   /** One shingle-set row per doc: (doc_id, shingles: distinct STRING
     * k-grams, set_size > 0). Strings, not hashes, deliberately: the
     * verification contract is then Jaccard over the true k-gram sets,
@@ -294,7 +211,7 @@ object DedupOps {
     * Spark hashes them for exchange anyway, and the stop-shingle cap
     * bounds the posting volume that actually shuffles.
     */
-  private def shingleSets(spark: SparkSession, docs: DataFrame, k: Int): DataFrame = {
+  private[graft] def shingleSets(spark: SparkSession, docs: DataFrame, k: Int): DataFrame = {
     val cfg = GraftConfig.default.copy(kGram = k)
     val bcCfg = spark.sparkContext.broadcast(cfg)
     val shUdf = udf((text: String) => {
@@ -320,7 +237,7 @@ object DedupOps {
     * and verification falls back to the string intersect — same output,
     * original cost, no silent wrong answer either way.
     */
-  private def hashInjectiveOnVocab(dfTab: DataFrame): Boolean = {
+  private[graft] def hashInjectiveOnVocab(dfTab: DataFrame): Boolean = {
     val r = dfTab.agg(count(lit(1)).as("n"),
       countDistinct(xxhash64(col("sh"))).as("nh")).collect()(0)
     r.getLong(0) == r.getLong(1)
@@ -332,7 +249,7 @@ object DedupOps {
     * `hashInjectiveOnVocab`) the intersect runs on per-doc xxhash64 arrays
     * — the hashing is a per-DOC projection before the build-side
     * broadcast, so candidate rows intersect narrow long arrays. */
-  private def verifyJaccard(cand: DataFrame, sets: DataFrame, threshold: Double,
+  private[graft] def verifyJaccard(cand: DataFrame, sets: DataFrame, threshold: Double,
       hashed: Boolean): DataFrame = {
     val v =
       if (hashed) sets.withColumn("shingles", transform(col("shingles"), x => xxhash64(x)))

@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import graft.kernel._
 import graft.hash.SimHash
 import graft.cluster.ConnectedComponents
@@ -18,6 +17,13 @@ import graft.ledger.Ledger
   *   map-side partial counts, AQE skew join) → signature verification
   *   (positional equality > 50) [+ exact k-gram Jaccard] →
   *   large-star/small-star connected components → (url, cluster_id).
+  *
+  * One pair producer (`pairGraph`) owns the middle of that chain, from a
+  * signature table to exact edges ∪ verified LSH pairs. `run()` is
+  * audit → producer → CC → assign, `dupPairs`/`dupPairsFromSigs` return the
+  * producer's pairs, and the incremental probe reuses its candidate →
+  * verify → union tail (`pairTail`) over the probed band subset, so batch
+  * and probe pair sets come from one body of code.
   *
   * Scale design notes (100 TB / 10^12 docs):
   *  - One typed mapPartitions computes signature+simhash+exact hash per doc;
@@ -324,15 +330,19 @@ final class DedupPipeline(
     * (band_id, band_hash, doc_id). ≅ L2/L3 band table
     * (StorageInterface.py:731-746, MongoDbStorage.py:868-895).
     */
-  def bandStage(repSigs: DataFrame): DataFrame = {
+  def bandStage(repSigs: DataFrame): DataFrame =
+    repSigs.select(col("doc_id"), posexplode(bandHashes(col("sig"))).as(Seq("band_id", "band_hash")))
+
+  /** Per-band hashes of a packed signature column, one array element per
+    * configured band — the band kernel every band table is built from
+    * (batch, probe and the streaming near-dup state). */
+  private[graft] def bandHashes(sig: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val bcCfg = spark.sparkContext.broadcast(cfg)
     val bandsUdf = udf((sig: Array[Byte]) => {
       val c = bcCfg.value
-      val b = new Bands(c)
-      val unpacked = new MinHasher(c).unpack(sig)
-      b.bandHashes(unpacked)
+      new Bands(c).bandHashes(new MinHasher(c).unpack(sig))
     })
-    repSigs.select(col("doc_id"), posexplode(bandsUdf(col("sig"))).as(Seq("band_id", "band_hash")))
+    bandsUdf(sig)
   }
 
   /** SimHash banding: chunk-pair tables DERIVED from the configured Hamming
@@ -369,12 +379,21 @@ final class DedupPipeline(
     */
   def repBandTable(sigs0: DataFrame, precomputedReps: Option[DataFrame] = None): DataFrame = {
     val reps = precomputedReps.getOrElse(exactGroups(sigs0)._1)
-    val hashable = sigs0.where(col("hashable"))
-    val repSigs = hashable
+    bandsOf(repSigs(sigs0.where(col("hashable")), reps))
+  }
+
+  /** The hashable rows that band: each exact group's rep (`reps.rep_id`)
+    * plus every doc without an exact hash. */
+  private def repSigs(hashable: DataFrame, reps: DataFrame): DataFrame =
+    hashable
       .join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
       .unionByName(hashable.where(!col("has_exact")))
-    val mh = bandStage(repSigs)
-    if (opts.simHashChannel) mh.unionByName(simhashBandStage(repSigs)) else mh
+
+  /** Minhash band postings of `sigs`, plus the simhash chunk tables when
+    * that channel is on: (doc_id, band_id, band_hash). */
+  private[graft] def bandsOf(sigs: DataFrame): DataFrame = {
+    val mh = bandStage(sigs)
+    if (opts.simHashChannel) mh.unionByName(simhashBandStage(sigs)) else mh
   }
 
   // ---- candidate generation (the load-bearing shuffle) ----------------
@@ -445,27 +464,116 @@ final class DedupPipeline(
       .select("a", "b", "score", "hamming", "n_bands", "jaccard")
   }
 
+  // ---- the pair producer ----------------------------------------------
+
+  /** What one producer call yields: the exact channel's edges (src, dst)
+    * and the LSH channel's verified pairs (a, b, score, hamming, n_bands,
+    * jaccard — the stored schema of the "verified" ledger stage; jaccard is
+    * null unless the caller passed text). Both tables are lazy. The
+    * producer's ephemeral checkpoints (the shared rep table and the
+    * candidate table) stay pinned until `release()`, which a caller invokes
+    * once every consumer of both tables has materialized.
+    */
+  private[graft] final class PairGraph(val exactEdges: DataFrame, val verified: DataFrame,
+      checkpoints: Seq[DataFrame]) {
+    /** Both channels in one (src, dst, score, hamming, flags) table. */
+    def pairs: DataFrame = DedupPipeline.unionDisjointChannels(
+      verified.select(col("a").as("src"), col("b").as("dst"), col("score"), col("hamming")),
+      exactEdges)
+
+    def release(): Unit = checkpoints.foreach(DedupPipeline.releaseCheckpoint)
+  }
+
+  /** `f` as ledger stage `name` when `stages` is set, plain otherwise. */
+  private def stage(stages: Option[Ledger], name: String, params: String,
+      upstream: Seq[String])(f: => DataFrame): DataFrame =
+    stages match {
+      case Some(l) => l.stage(name, l.descriptor(name, params, upstream))(f)
+      case None => f
+    }
+
+  /** THE pair producer: signature table → exact edges ∪ verified LSH pairs
+    * (≅ the reference matcher's band collision → verification →
+    * aggregation flow, MatcherInterface.py:150-236).
+    *
+    *  - The exact channel groups ALL has_exact docs, including the short
+    *    non-minhashable gap, so byte-identical short docs still dedup.
+    *  - The rep table feeds two separately-materialized jobs (bands →
+    *    candidates, and the exact edges' consumer). A LAZY localCheckpoint
+    *    lets the first consumer materialize it once and the second reuse
+    *    the stored blocks instead of re-running the 128-bit groupBy; no
+    *    extra job, since eager=false rides the first consumer's action.
+    *  - `stages` wraps each step in its ledger stage (names, descriptors
+    *    and stored schemas are the resume contract) and co-locates the
+    *    persisted band table by band key (`TableStore.bandLayout`, the
+    *    layout probes rely on). Unstaged, candidateStage shuffles on the
+    *    packed band key anyway, so that exchange would be pure waste.
+    *  - `text` (url, text), when given, adds exact k-gram Jaccard
+    *    verification of the LSH pairs.
+    */
+  private[graft] def pairGraph(sigs0: DataFrame, stages: Option[Ledger] = None,
+      text: Option[DataFrame] = None): PairGraph = {
+    val reps = exactGroups(sigs0)._1.localCheckpoint(eager = false)
+    val exactEdges = stage(stages, "exact_edges", "", Seq("signatures")) {
+      exactGroups(sigs0, Some(reps))._2
+    }
+    val bandTable = stage(stages, "bands",
+        s"bands=${cfg.bands},sh=${opts.simHashChannel},shmax=${opts.simHashMaxHamming},bandsv=2",
+        Seq("signatures")) {
+      val all = repBandTable(sigs0, Some(reps))
+      if (stages.isEmpty) all
+      else graft.storage.TableStore.bandLayout(all,
+        if (opts.numPartitions > 0) opts.numPartitions
+        else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    }
+    pairTail(bandTable, sigs0.where(col("hashable")), exactEdges, stages, text,
+      identity, Seq(reps))
+  }
+
+  /** The producer's candidate → verify → union tail over a band table.
+    * `keep` filters the candidate pairs before verification (the probe
+    * keeps only pairs touching its new batch); `sigs` holds the hashable
+    * signatures of every doc the band table names.
+    */
+  private def pairTail(bands: DataFrame, sigs: DataFrame, exactEdges: DataFrame,
+      stages: Option[Ledger], text: Option[DataFrame], keep: DataFrame => DataFrame,
+      checkpoints: Seq[DataFrame]): PairGraph = {
+    var candidateCheckpoint = Seq.empty[DataFrame]
+    val candidates = stage(stages, "candidates",
+        s"cap=${opts.maxBandGroupSize},r=${cfg.bandMatchesRequired}", Seq("bands")) {
+      val c = candidateStage(bands, cfg.bandMatchesRequired)
+      candidateCheckpoint = Seq(c)
+      c
+    }
+    val verified0 = verifyStage(keep(candidates), sigs)
+    val verified = stage(stages, "verified",
+        s"thr=${cfg.matchingThreshold},jac=${opts.jaccardVerify}," +
+          s"jthr=${opts.jaccardThreshold},shfloor=${opts.simHashScoreFloor}," +
+          s"shmax=${opts.simHashMaxHamming}",
+        Seq("candidates")) {
+      text match {
+        case Some(docs) => jaccardStage(verified0, docs, sigs)
+        case None => verified0.withColumn("jaccard", lit(null).cast("double"))
+      }
+    }
+    new PairGraph(exactEdges, verified, checkpoints ++ candidateCheckpoint)
+  }
+
+  /** Text for the producer's Jaccard verification, when it is on. */
+  private def jaccardText(docs: DataFrame): Option[DataFrame] =
+    if (opts.jaccardVerify) Some(docs) else None
+
   // ---- full run -------------------------------------------------------
 
   /** Returns (url, doc_id, cluster_id): cluster_id is the min doc_id of the
     * near-duplicate component (singletons cluster with themselves).
     */
   def run(input: DataFrame, fromHtml: Boolean = true): DataFrame = {
-    val shuffleN =
-      if (opts.numPartitions > 0) opts.numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
-    def runStage(name: String, params: String, upstream: Seq[String])(f: => DataFrame): DataFrame =
-      ledger match {
-        case Some(l) => l.stage(name, l.descriptor(name, params, upstream))(f)
-        case None => f
-      }
-
     val docs = extractStage(input, fromHtml)
     // cache the FULL signature table: it feeds banding, verification and the
     // final assignment join — without this the typed signature pass (the
     // dominant CPU cost) would run twice
-    val sigsRaw = runStage("signatures", s"fromHtml=$fromHtml", Nil) {
+    val sigsRaw = stage(ledger, "signatures", s"fromHtml=$fromHtml", Nil) {
       signatureStage(docs).toDF()
     }.cache()
 
@@ -493,63 +601,22 @@ final class DedupPipeline(
       else if (ledger.isDefined) resolveIdCollisions(sigsRaw, urlUnique = true)
       else sigsRaw // optimistic; auditFuture decides below
 
-    // `run()`'s pipeline from an (audited or optimistically-unaudited)
-    // signature table to the (url, doc_id, cluster_id) assignment
+    // producer → CC → assign, from an (audited or optimistically unaudited)
+    // signature table
     def runFromAudited(sigs0: DataFrame): DataFrame = {
-    val sigs = sigs0.where(col("hashable"))
-
-    // exact channel over ALL has_exact docs (incl. short non-minhashable ones).
-    // reps feeds TWO separately-materialized jobs (the bands/candidates
-    // checkpoint and the exact-edges/CC job); a LAZY localCheckpoint makes
-    // the first consumer materialize the small rep table once and the
-    // second reuse the stored blocks instead of re-running the 128-bit
-    // groupBy over the signature cache (guide §1.2: one aggregation, not
-    // two; no extra job — eager=false rides the first consumer's action)
-    val reps = exactGroups(sigs0)._1.localCheckpoint(eager = false)
-    val exactEdges = runStage("exact_edges", "", Seq("signatures")) {
-      exactGroups(sigs0, Some(reps))._2
-    }
-
-    val bandTable = runStage("bands",
-        s"bands=${cfg.bands},sh=${opts.simHashChannel},shmax=${opts.simHashMaxHamming},bandsv=2",
-        Seq("signatures")) {
-      val all = repBandTable(sigs0, Some(reps))
-      // co-locate by band key only when the table is being persisted for
-      // probes/resume (TableStore.bandLayout — THE band-table layout
-      // contract); in the fused run candidateStage shuffles on the packed
-      // band key anyway — an extra exchange here would be pure waste
-      if (ledger.isDefined) graft.storage.TableStore.bandLayout(all, shuffleN)
-      else all
-    }
-
-    val candidates = runStage("candidates",
-        s"cap=${opts.maxBandGroupSize},r=${cfg.bandMatchesRequired}", Seq("bands")) {
-      candidateStage(bandTable, cfg.bandMatchesRequired)
-    }
-
-    val verified0 = verifyStage(candidates, sigs)
-    val verified = runStage("verified",
-        s"thr=${cfg.matchingThreshold},jac=${opts.jaccardVerify}," +
-          s"jthr=${opts.jaccardThreshold},shfloor=${opts.simHashScoreFloor}," +
-          s"shmax=${opts.simHashMaxHamming}",
-        Seq("candidates")) {
-      if (opts.jaccardVerify) jaccardStage(verified0, docs, sigs)
-      else verified0.withColumn("jaccard", lit(null).cast("double"))
-    }
-
-    val lshEdges = verified.select(col("a").as("src"), col("b").as("dst"))
-    val edges = exactEdges.select("src", "dst").unionByName(lshEdges)
-
-    val components = runStage("components", "", Seq("verified")) {
-      ConnectedComponents.run(edges.withColumnRenamed("src", "lo").withColumnRenamed("dst", "hi")
-        .select(col("lo").as("src"), col("hi").as("dst")))
-    }
-
-    // every doc: component if present, else itself
-    val allDocs = sigs0.select("url", "doc_id")
-    allDocs.join(components.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .withColumn("cluster_id", coalesce(col("component"), col("doc_id")))
-      .select("url", "doc_id", "cluster_id")
+      val graph = pairGraph(sigs0, ledger, jaccardText(docs))
+      val edges = graph.exactEdges.select("src", "dst")
+        .unionByName(graph.verified.select(col("a").as("src"), col("b").as("dst")))
+      val components = stage(ledger, "components", "", Seq("verified")) {
+        ConnectedComponents.run(edges)
+      }
+      // CC collected or checkpointed its edges: both channels materialized
+      graph.release()
+      // every doc: component if present, else itself
+      sigs0.select("url", "doc_id")
+        .join(components.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
+        .withColumn("cluster_id", coalesce(col("component"), col("doc_id")))
+        .select("url", "doc_id", "cluster_id")
     }
 
     val optimistic = runFromAudited(sigs0First)
@@ -570,16 +637,39 @@ final class DedupPipeline(
     !sigs.groupBy("doc_id").agg(count(lit(1)).as("n"))
       .where(col("n") > 1).isEmpty
 
-  /** Verified duplicate pairs only (no clustering) — used by tests/bench. */
+  /** Verified duplicate pairs only (no clustering): the producer's pairs,
+    * Jaccard-verified under `opts.jaccardVerify` exactly as in `run()`. */
   def dupPairs(input: DataFrame, fromHtml: Boolean = true): DataFrame = {
     val docs = extractStage(input, fromHtml)
     val sigs0 = signatureStage(docs).toDF().cache()
     // eager cut-over: verified pairs are cap-bounded and small; release the
-    // signature cache instead of pinning one per call
-    val out = dupPairsFromSigs(sigs0).localCheckpoint(true)
+    // signature cache and the producer's checkpoints instead of pinning
+    // them per call
+    val graph = pairGraph(sigs0, text = jaccardText(docs))
+    val out = graph.pairs.localCheckpoint(true)
+    graph.release()
     sigs0.unpersist()
     out
   }
+
+  /** As `dupPairs` (without Jaccard verification), over a precomputed
+    * (ideally cached) signature table — callers that already materialized
+    * `signatureStage` (the dominant CPU cost of the whole pipeline) must not
+    * pay it a second time.
+    */
+  def dupPairsFromSigs(sigs0: DataFrame): DataFrame = pairGraph(sigs0).pairs
+
+  // ---- probe-only incremental pairs ------------------------------------
+
+  /** What a probe-style incremental step computes, split out for state
+    * maintenance: `candInput` feeds candidate generation; `exactEdges` are
+    * the exact-channel pairs touching new docs; `newBands` are the NEW
+    * reps' band postings (what a rolling index must append); `replacedReps`
+    * are old rep doc_ids whose groups re-elected a new rep (what a rolling
+    * index must tombstone so the stored band table stays rep-only).
+    */
+  final case class ProbeParts(candInput: DataFrame, exactEdges: DataFrame,
+      newBands: DataFrame, replacedReps: DataFrame)
 
   /** PROBE-ONLY incremental pair production — the scale-correct shape for
     * "a small new batch lands on a 10^12-doc corpus" (≅ the reference's
@@ -618,16 +708,6 @@ final class DedupPipeline(
     * Assumes `newSigs0` doc_ids are disjoint from the old corpus (re-sent
     * urls should be excluded first via `MaintenanceOps.newDocs`).
     */
-  /** What a probe-style incremental step computes, split out for state
-    * maintenance: `candInput` feeds candidate generation; `exactEdges` are
-    * the exact-channel pairs touching new docs; `newBands` are the NEW
-    * reps' band postings (what a rolling index must append); `replacedReps`
-    * are old rep doc_ids whose groups re-elected a new rep (what a rolling
-    * index must tombstone so the stored band table stays rep-only).
-    */
-  final case class ProbeParts(candInput: DataFrame, exactEdges: DataFrame,
-      newBands: DataFrame, replacedReps: DataFrame)
-
   def probeDupPairs(oldSigs0: DataFrame, newSigs0: DataFrame,
       oldBands: Option[DataFrame] = None): DataFrame =
     probeDupPairsFrom(probeParts(oldSigs0, newSigs0, oldBands), oldSigs0, newSigs0)
@@ -635,26 +715,24 @@ final class DedupPipeline(
   /** As `probeDupPairs` over an ALREADY-BUILT `ProbeParts` — callers that
     * also consume the state deltas (DedupJob's rolling mode) must not pay
     * the probe-plan construction (old-side exact-group aggregation, band
-    * probe) twice.
+    * probe) twice. Runs the producer's tail with the touching-new filter.
     */
   private[graft] def probeDupPairsFrom(parts: ProbeParts,
       oldSigs0: DataFrame, newSigs0: DataFrame): DataFrame = {
     val newIds = newSigs0.select("doc_id")
-    val ProbeParts(candInput, exactEdges, _, _) = parts
-
-    // ---- candidate generation over the probed subset only ----
-    val candidates = candidateStage(candInput, cfg.bandMatchesRequired)
-    val candTouchingNew = candidates
-      .join(broadcast(newIds).withColumnRenamed("doc_id", "a"), Seq("a"), "left_semi")
-      .unionByName(candidates
-        .join(broadcast(newIds).withColumnRenamed("doc_id", "b"), Seq("b"), "left_semi")
-        .join(broadcast(newIds).withColumnRenamed("doc_id", "a"), Seq("a"), "left_anti"))
-
     val allHashable = oldSigs0.where(col("hashable")).unionByName(newSigs0.where(col("hashable")))
-    val lsh = verifyStage(candTouchingNew, allHashable)
-      .select(col("a").as("src"), col("b").as("dst"), col("score"), col("hamming"))
-    DedupPipeline.unionDisjointChannels(lsh, exactEdges)
+    pairTail(parts.candInput, allHashable, parts.exactEdges, None, None,
+      touching(_, newIds, "a", "b"), Nil).pairs
   }
+
+  /** Rows of `pairs` whose `x` or `y` endpoint is in `ids` (doc_id), each
+    * row once. */
+  private def touching(pairs: DataFrame, ids: DataFrame, x: String, y: String): DataFrame =
+    pairs
+      .join(broadcast(ids).withColumnRenamed("doc_id", x), Seq(x), "left_semi")
+      .unionByName(pairs
+        .join(broadcast(ids).withColumnRenamed("doc_id", y), Seq(y), "left_semi")
+        .join(broadcast(ids).withColumnRenamed("doc_id", x), Seq(x), "left_anti"))
 
   /** The probe plan's inputs and state deltas (see `ProbeParts`) — split
     * out so tests can assert the candidate volume scales with the batch,
@@ -663,20 +741,13 @@ final class DedupPipeline(
     */
   private[graft] def probeParts(oldSigs0: DataFrame, newSigs0: DataFrame,
       oldBands: Option[DataFrame]): ProbeParts = {
-    val newIds = newSigs0.select("doc_id")
-
     // ---- exact channel, touched groups only ----
     val newExact = newSigs0.where(col("has_exact"))
     val touchedHashes = newExact.select("exact_hash", "exact_hash2").distinct()
     val oldTouched = oldSigs0.where(col("has_exact"))
       .join(broadcast(touchedHashes), Seq("exact_hash", "exact_hash2"), "left_semi")
-    val exactInput = oldTouched.unionByName(newExact)
-    val (touchedReps, exactEdgesAll) = exactGroups(exactInput)
-    val exactEdges = exactEdgesAll
-      .join(broadcast(newIds).withColumnRenamed("doc_id", "src"), Seq("src"), "left_semi")
-      .unionByName(exactEdgesAll
-        .join(broadcast(newIds).withColumnRenamed("doc_id", "dst"), Seq("dst"), "left_semi")
-        .join(broadcast(newIds).withColumnRenamed("doc_id", "src"), Seq("src"), "left_anti"))
+    val (touchedReps, exactEdgesAll) = exactGroups(oldTouched.unionByName(newExact))
+    val exactEdges = touching(exactEdgesAll, newSigs0.select("doc_id"), "src", "dst")
 
     // ---- rep re-election bookkeeping ----
     // old-state rep per touched group (what the old band table banded)
@@ -691,12 +762,7 @@ final class DedupPipeline(
 
     // ---- new-side banding: ONLY new docs that are union reps (or have no
     // exact hash) band, mirroring the batch rep-only banding ----
-    val newHashable = newSigs0.where(col("hashable"))
-    val newRepSigs = newHashable
-      .join(touchedReps.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
-      .unionByName(newHashable.where(!col("has_exact")))
-    val mhNew = bandStage(newRepSigs)
-    val newBands = if (opts.simHashChannel) mhNew.unionByName(simhashBandStage(newRepSigs)) else mhNew
+    val newBands = bandsOf(repSigs(newSigs0.where(col("hashable")), touchedReps))
 
     // ---- probe the old band table on the new batch's band keys ----
     def packKey(df: DataFrame): DataFrame = df.select(
@@ -725,25 +791,6 @@ final class DedupPipeline(
       exactEdges,
       newBands.select("doc_id", "band_id", "band_hash"),
       replacedOldReps)
-  }
-
-  /** As `dupPairs`, but over a precomputed (ideally cached) signature table —
-    * callers that already materialized `signatureStage` (the dominant CPU
-    * cost of the whole pipeline) must not pay it a second time.
-    */
-  def dupPairsFromSigs(sigs0: DataFrame): DataFrame = {
-    val sigs = sigs0.where(col("hashable"))
-    // exact channel sees ALL has_exact docs, incl. the short non-minhashable
-    // gap. Lazy-checkpoint reps: the band table (candidates job) and the
-    // exact edges (merge job) materialize in different jobs — one 128-bit
-    // groupBy instead of two (see run()'s identical pattern)
-    val reps = exactGroups(sigs0)._1.localCheckpoint(eager = false)
-    val exactEdges = exactGroups(sigs0, Some(reps))._2
-    val all = repBandTable(sigs0, Some(reps))
-    val candidates = candidateStage(all, cfg.bandMatchesRequired)
-    val lsh = verifyStage(candidates, sigs)
-      .select(col("a").as("src"), col("b").as("dst"), col("score"), col("hamming"))
-    DedupPipeline.unionDisjointChannels(lsh, exactEdges)
   }
 }
 
@@ -975,39 +1022,25 @@ object DedupPipeline {
     }
   }
 
-  /** A4 analog — per-pair elementwise merge of the fuzzy and exact channels:
-    * best score wins, channel flags OR together
+  /** A4 analog — the channel merge of the pair producer: LSH pairs carry
+    * flag minhash=1, exact edges flag exact=2 at score 100, hamming 0
     * (≅ _craftResultDict's per-key max(score, is_pic, is_min) merge,
-    * /root/reference/mcrit/matchers/MatcherInterface.py:558-600). The same
-    * pair rarely appears in both channels (exact members never band), but
-    * the report row must carry "best score + which channels" when it does.
-    */
-  def mergeChannels(lsh: DataFrame, exactEdges: DataFrame): DataFrame = {
-    val l = lsh.select(col("src"), col("dst"), col("score"), col("hamming"),
-      lit(FlagMinhash).as("flags"))
-    val e = exactEdges.select(col("src"), col("dst"),
-      lit(100.0).as("score"), lit(0).as("hamming"), lit(FlagExact).as("flags"))
-    l.unionByName(e).groupBy("src", "dst")
-      .agg(max("score").as("score"), min("hamming").as("hamming"),
-        bit_or(col("flags")).cast("int").as("flags"))
-  }
-
-  /** `mergeChannels` for callers whose two channels are DISJOINT by
-    * construction, where the per-pair merge aggregate is the identity and
-    * its exchange is pure overhead (guide §2.4: a distinct/merge over data
-    * that is already unique). The rep-only banding invariant makes the
-    * batch and probe pair producers exactly such callers: an LSH pair's
-    * BOTH endpoints sit in the band table = {exact-group reps} ∪ {hashable
-    * docs with no exact hash}, while an exact edge's dst is a NON-rep
-    * member of an exact group — a doc that, having an exact hash and not
-    * being its group's rep, is excluded from the band table. No (src, dst)
-    * can therefore appear in both inputs, and within each channel pairs are
-    * already unique (verifyStage's candidates arrive grouped on (a, b);
-    * exactGroups emits one edge per member). Same schema and rows as
-    * `mergeChannels`, one less shuffle. (A 64-bit doc_id birthday collision
-    * could break the premise; `run()` repairs those ids before pairing, and
-    * the pair surfaces inherit the same astronomical-rarity trade the rest
-    * of the unaudited pair path already makes.)
+    * mcrit/matchers/MatcherInterface.py:558-600). A plain union, because
+    * the two channels are DISJOINT by construction and the per-pair merge
+    * aggregate would be the identity (guide §2.4: a distinct/merge over
+    * data that is already unique). The rep-only banding
+    * invariant guarantees it: an LSH pair's BOTH endpoints sit in the band
+    * table = {exact-group reps} ∪ {hashable docs with no exact hash}, while
+    * an exact edge's dst is a NON-rep member of an exact group — a doc that,
+    * having an exact hash and not being its group's rep, is excluded from
+    * the band table. No (src, dst) can therefore appear in both inputs, and
+    * within each channel pairs are already unique (verifyStage's candidates
+    * arrive grouped on (a, b); exactGroups emits one edge per member); a
+    * test asserts (src, dst) uniqueness on batch and probe output. (A 64-bit
+    * doc_id birthday collision could break the premise; `run()` repairs
+    * those ids before pairing, and the pair surfaces inherit the same
+    * astronomical-rarity trade the rest of the unaudited pair path already
+    * makes.)
     */
   def unionDisjointChannels(lsh: DataFrame, exactEdges: DataFrame): DataFrame = {
     val l = lsh.select(col("src"), col("dst"), col("score"), col("hamming"),
@@ -1016,4 +1049,13 @@ object DedupPipeline {
       lit(100.0).as("score"), lit(0).as("hamming"), lit(FlagExact).as("flags"))
     l.unionByName(e)
   }
+
+  /** Drops the blocks behind a `localCheckpoint`ed frame; a no-op for any
+    * other frame (e.g. a ledger stage read back from storage). Only call it
+    * once every consumer of `df` has materialized. */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 }

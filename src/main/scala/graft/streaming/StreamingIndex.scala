@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.kernel.{Bands, GraftConfig, KGramShingler, MinHasher}
-import graft.pipeline.DocSig
+import graft.kernel.{GraftConfig, MinHasher}
+import graft.pipeline.{DedupPipeline, DocSig, PipelineOptions}
 
 /** Structured-Streaming incremental indexing — the streaming form of the
   * reference's missing-hash sweep (M7, /root/reference/mcrit/Worker.py:281-312):
@@ -57,58 +57,32 @@ object StreamingIndex {
     bandPostingsFromSigs(spark,
       firstSeenSigStream(spark, docs, cfg).toDF(), cfg, simHashChannel, simHashMaxHamming)
 
-  private def bandPostingsFromSigs(spark: SparkSession, sigs0: DataFrame,
-      cfg: GraftConfig, simHashChannel: Boolean, simHashMaxHamming: Int): DataFrame = {
-    val bcCfg = spark.sparkContext.broadcast(cfg)
-    val bandsUdf = udf((sig: Array[Byte]) => {
-      val c = bcCfg.value
-      new Bands(c).bandHashes(new MinHasher(c).unpack(sig))
-    })
-    val sigs = sigs0.where(col("hashable"))
-    val mh = sigs
-      .select(col("doc_id"), posexplode(bandsUdf(col("sig"))).as(Seq("band_id", "band_hash")))
-    if (!simHashChannel) mh
-    else {
-      val blocks = simHashMaxHamming + 2
-      val combosUdf = udf((v: Long) => graft.hash.SimHash.chunkCombos(v, blocks, 2))
-      mh.unionByName(sigs
-        .select(col("doc_id"), posexplode(combosUdf(col("simhash"))).as(Seq("band_id", "band_hash")))
-        .select(col("doc_id"), (col("band_id") + lit(100)).as("band_id"), col("band_hash")))
-    }
-  }
+  /** The batch band recipe (`DedupPipeline.bandsOf`) over a signature
+    * stream's hashable rows — stateless, so it runs per micro-batch. */
+  private def bandPostingsFromSigs(spark: SparkSession, sigs: DataFrame,
+      cfg: GraftConfig, simHashChannel: Boolean, simHashMaxHamming: Int): DataFrame =
+    new DedupPipeline(spark, cfg, PipelineOptions(simHashChannel = simHashChannel,
+      simHashMaxHamming = simHashMaxHamming)).bandsOf(sigs.where(col("hashable")))
 
   /** First-seen-only signature stream — the streaming composition of the
     * batch V7 rep-only collapse (the reference always dedups by sha256
     * before indexing, /root/reference/mcrit/storage/MemoryStorage.py:356-384):
-    * docs are signed in-flight, grouped by the 128-bit exact identity, and
-    * only each content's FIRST arrival passes through (one `FirstSeen`
-    * state row per distinct content — the same state shape and size bound
-    * as `exactDedupStream`); docs without an exact hash pass through
-    * unconditionally, as in the batch rep band table. Representative
-    * election is first-arrival (ascending doc_id within a micro-batch),
-    * not global min doc_id as in batch — a stream cannot see the future;
-    * probes stay correct because every member of an exact group carries
-    * identical band keys. Re-delivery of already-seen content (including
-    * the representative itself) emits nothing.
+    * the `first_seen` rows of `sigVerdictStream`, i.e. each distinct
+    * content's FIRST arrival plus every doc without an exact hash, as in
+    * the batch rep band table. Representative election is first-arrival
+    * (ascending doc_id within a micro-batch), not global min doc_id as in
+    * batch — a stream cannot see the future; probes stay correct because
+    * every member of an exact group carries identical band keys.
+    * Re-delivery of already-seen content (including the representative
+    * itself) emits nothing. Its state is `sigVerdictStream`'s: a query
+    * checkpointed under the former standalone first-seen operator must
+    * restart with a fresh checkpoint.
     */
   def firstSeenSigStream(spark: SparkSession, docs: DataFrame,
       cfg: GraftConfig = GraftConfig.default): Dataset[DocSig] = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val sigs = signatureStream(spark, docs, cfg)
-    val firstSeen = sigs.filter((d: DocSig) => d.has_exact)
-      .groupByKey(d => (d.exact_hash, d.exact_hash2))
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (_: (Long, Long), rows: Iterator[DocSig], state: GroupState[FirstSeen]) => {
-          if (state.exists) Iterator.empty
-          else {
-            // deterministic within a batch: first-seen = min (doc_id, url)
-            val f = rows.minBy(d => (d.doc_id, d.url))
-            state.update(FirstSeen(f.url, f.doc_id))
-            Iterator.single(f)
-          }
-        })
-    firstSeen.union(sigs.filter((d: DocSig) => !d.has_exact))
+    sigVerdictStream(spark, docs, cfg).where(col("first_seen"))
+      .drop("is_dup", "first_url", "first_seen").as[DocSig]
   }
 
   /** State row for a seen paragraph: where it was first kept. */
@@ -255,16 +229,12 @@ object StreamingIndex {
       cfg: GraftConfig, cap: Int): Dataset[StreamPair] = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val bcCfg = spark.sparkContext.broadcast(cfg)
-    val bandsUdf = udf((sig: Array[Byte]) => {
-      val c = bcCfg.value
-      new Bands(c).bandHashes(new MinHasher(c).unpack(sig))
-    })
     val postings = sigs
       .where(col("hashable"))
       .select(col("doc_id"), col("sig"),
-        posexplode(bandsUdf(col("sig"))).as(Seq("band_id", "band_hash")))
-      .select(graft.pipeline.DedupPipeline.packedBandKey(col("band_id"), col("band_hash")).as("band_key"),
+        posexplode(new DedupPipeline(spark, cfg).bandHashes(col("sig")))
+          .as(Seq("band_id", "band_hash")))
+      .select(DedupPipeline.packedBandKey(col("band_id"), col("band_hash")).as("band_key"),
         col("doc_id"), col("sig"))
       .as[(Long, Long, Array[Byte])]
     val threshold = cfg.matchingThreshold
@@ -472,38 +442,19 @@ object StreamingIndex {
   /** Per-exact-hash state: the first url/doc_id that claimed this content. */
   final case class FirstSeen(url: String, doc_id: Long)
 
-  /** Streaming EXACT dedup with custom state
-    * (`flatMapGroupsWithState`): docs are signed in-flight, grouped by the
-    * 128-bit exact identity, and each group keeps one `FirstSeen` state row —
-    * the first arrival wins, every later arrival is flagged as its duplicate.
-    * The streaming analog of the batch exact channel (V6/V7): state size is
-    * one row per DISTINCT document content, not per document.
+  /** Streaming EXACT dedup: the exact-identity verdict rows of
+    * `sigVerdictStream` — each 128-bit content keeps one `FirstSeen` state
+    * row, the first arrival wins and every later arrival is flagged as its
+    * duplicate. The streaming analog of the batch exact channel (V6/V7):
+    * state size is one row per DISTINCT document content, not per document.
+    * Its state is `sigVerdictStream`'s: a query checkpointed under the
+    * former standalone exact-dedup operator must restart with a fresh
+    * checkpoint.
     */
   def exactDedupStream(spark: SparkSession, docs: DataFrame,
       cfg: GraftConfig = GraftConfig.default): Dataset[DedupVerdict] = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    signatureStream(spark, docs, cfg)
-      .where(col("has_exact"))
-      .groupByKey(d => (d.exact_hash, d.exact_hash2))
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (_: (Long, Long), rows: Iterator[DocSig], state: GroupState[FirstSeen]) => {
-          val out = scala.collection.mutable.ArrayBuffer.empty[DedupVerdict]
-          // deterministic within a batch: first-seen = min doc_id arrival
-          val batch = rows.toArray.sortBy(d => (d.doc_id, d.url))
-          var first = state.getOption
-          batch.foreach { d =>
-            first match {
-              case None =>
-                first = Some(FirstSeen(d.url, d.doc_id))
-                out += DedupVerdict(d.url, d.doc_id, is_dup = false, d.url)
-              case Some(f) =>
-                out += DedupVerdict(d.url, d.doc_id,
-                  is_dup = !(f.doc_id == d.doc_id && f.url == d.url), f.url)
-            }
-          }
-          first.foreach(state.update)
-          out.iterator
-        })
+    sigVerdictStream(spark, docs, cfg).where(col("has_exact"))
+      .select("url", "doc_id", "is_dup", "first_url").as[DedupVerdict]
   }
 }

@@ -4,7 +4,7 @@ package graft.tools
   * scale factors via `Bench.ensureCorpus` — the SAME contract (path
   * scheme, seed, write settings) the benchmark itself uses, so profiling
   * tools never measure a divergent corpus. (`Bench` generates these
-  * lazily itself; this exists so StageProfile/DedupRunOne/CandProfile can
+  * lazily itself; this exists so DedupRunOne and the other profiling mains can
   * run standalone without first running the full bench.)
   */
 object GenCorpus {

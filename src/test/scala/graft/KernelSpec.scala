@@ -99,6 +99,18 @@ class BandSpec extends AnyFunSuite {
     assert(ha(1) != hb(1))
   }
 
+  test("wide bands of 32-bit values hash the full decimal band string") {
+    // 100 ints of 11 decimal chars each = 1100 bytes per band string
+    val cfg = GraftConfig.default.copy(
+      signatureLength = 128, signatureBits = 32, bands = Seq(100 -> 1))
+    val sig = Array.tabulate(128)(i => Int.MinValue + i)
+    val got = new Bands(cfg).bandHashes(sig)
+    val str = cfg.bandProjection(0).map(i => sig(i).toString).mkString
+      .getBytes("US-ASCII")
+    assert(str.length == 1100)
+    assert(got.toSeq == Seq(Murmur3.hashU(str, 0) | (Murmur3.hashU(str, 1) << 32)))
+  }
+
   test("linear banding strategy: strided index selection") {
     val cfg = GraftConfig.default.copy(bands = Seq(4 -> 16), bandStrategy = "linear")
     val proj = cfg.bandProjection

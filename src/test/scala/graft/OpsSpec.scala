@@ -179,7 +179,7 @@ class DedupOpsSpec extends SparkTestBase {
     assert(!capped.exists(p => p._1 == 5L || p._2 == 5L))
   }
 
-  test("plain postings join ≡ prefix-filtered variant, and auto dispatches to both") {
+  test("plain postings join ≡ prefix-filtered variant") {
     // boilerplate-heavy + near-dup corpus exercising cap, length filter and
     // prefix pruning together
     val boiler = "shared boilerplate words repeat across many documents here"
@@ -191,17 +191,9 @@ class DedupOpsSpec extends SparkTestBase {
     for (cap <- Seq(3, 1000)) {
       val pre = DedupOps.ngramJaccardPairs(spark, docs, threshold = 0.4, maxPostings = cap)
         .as[(Long, Long, Double)].collect().toSet
-      val plain = DedupOps.ngramJaccardPairsPlain(spark, docs, threshold = 0.4, maxPostings = cap)
-        .as[(Long, Long, Double)].collect().toSet
+      val plain = JaccardReference.ngramJaccardPairsPlain(spark, docs, threshold = 0.4,
+        maxPostings = cap).as[(Long, Long, Double)].collect().toSet
       assert(pre == plain, s"cap=$cap: prefix $pre vs plain $plain")
-    }
-    // auto picks a variant (either), same answer; both regimes exercised
-    for (cutoff <- Seq(0.0, 1e9)) {
-      val auto = DedupOps.ngramJaccardAuto(spark, docs, threshold = 0.4, eDfCutoff = cutoff)
-        .as[(Long, Long, Double)].collect().toSet
-      val ref = DedupOps.ngramJaccardPairs(spark, docs, threshold = 0.4)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(auto == ref, s"cutoff=$cutoff: $auto vs $ref")
     }
   }
 }

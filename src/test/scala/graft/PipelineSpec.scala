@@ -313,11 +313,81 @@ class DedupPipelineSpec extends SparkTestBase {
     import spark.implicits._
     val lsh = Seq((1L, 2L, 80.0, 3), (3L, 4L, 60.0, 5)).toDF("src", "dst", "score", "hamming")
     val exact = Seq((1L, 2L), (5L, 6L)).toDF("src", "dst")
-    val m = DedupPipeline.mergeChannels(lsh, exact).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getDouble(2), r.getInt(3), r.getInt(4)))).toMap
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[((Long, Long), (Double, Int, Int))] =
+      df.select("src", "dst", "score", "hamming", "flags").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getDouble(2), r.getInt(3), r.getInt(4))))
+        .toSeq.sortBy(_._1)
+    val m = rows(ChannelMergeReference.mergeChannels(lsh, exact)).toMap
     assert(m((1L, 2L)) == ((100.0, 0, 3)), "both channels: max score, min hamming, flags 1|2")
     assert(m((3L, 4L)) == ((60.0, 5, 1)))
     assert(m((5L, 6L)) == ((100.0, 0, 2)))
+    // the pair producers only ever feed disjoint channels, where the plain
+    // union must equal the per-pair merge row for row
+    val disjointExact = exact.where(col("src") =!= 1L)
+    assert(rows(DedupPipeline.unionDisjointChannels(lsh, disjointExact)) ==
+      rows(ChannelMergeReference.mergeChannels(lsh, disjointExact)))
+  }
+
+  test("exact and LSH channels are disjoint: (src, dst) unique in batch and probe pairs") {
+    import spark.implicits._
+    val corpus = CorpusGen.generate(spark, sf = 0.003, seed = 7L).cache()
+    val pipe = new DedupPipeline(spark)
+    def assertUnique(pairs: org.apache.spark.sql.DataFrame, what: String): Unit = {
+      val rows = pairs.select("src", "dst", "flags").as[(Long, Long, Int)].collect()
+      assert(rows.map(r => (r._1, r._2)).distinct.length == rows.length,
+        s"$what repeats a (src, dst)")
+      assert(rows.map(_._3).toSet == Set(DedupPipeline.FlagMinhash, DedupPipeline.FlagExact),
+        s"$what must carry pairs of both channels")
+    }
+    assertUnique(pipe.dupPairs(corpus, fromHtml = true), "dupPairs")
+    // probe: a quarter of the corpus lands on the rest, so exact groups and
+    // near-dup clusters straddle the old/new boundary
+    val sigs = pipe.signatureStage(pipe.extractStage(corpus, fromHtml = true)).toDF().cache()
+    val isNew = pmod(xxhash64(col("url")), lit(4)) === 0
+    assertUnique(pipe.probeDupPairs(sigs.where(!isNew), sigs.where(isNew)), "probe")
+    sigs.unpersist()
+    corpus.unpersist()
+  }
+
+  test("dupPairs applies Jaccard verification exactly as run() does") {
+    import spark.implicits._
+    val near = (1 to 40).map(i => s"tok${('a' + i % 26).toChar}$i")
+    val rows = Seq(("u1", near.mkString(" ")), ("u2", near.updated(5, "tweaked").mkString(" ")))
+      .toDF("url", "text")
+    // (pairs from dupPairs, whether run() clusters the two docs together)
+    def answers(opts: PipelineOptions): (Long, Boolean) = {
+      val pipe = new DedupPipeline(spark, opts = opts)
+      val clusters = pipe.run(rows, fromHtml = false).collect()
+        .map(r => r.getString(0) -> r.getLong(2)).toMap
+      (pipe.dupPairs(rows, fromHtml = false).count(), clusters("u1") == clusters("u2"))
+    }
+    assert(answers(PipelineOptions(jaccardVerify = true)) == ((1L, true)),
+      "one tweaked token stays above the default Jaccard threshold")
+    assert(answers(PipelineOptions(jaccardVerify = true, jaccardThreshold = 0.99)) ==
+      ((0L, false)), "a 0.99 Jaccard threshold must drop the pair in both surfaces")
+  }
+
+  test("run() and dupPairs() release the producer's checkpoints") {
+    // a corpus no other test caches: Spark shares cache entries between
+    // equal plans, so another test's signature cache would blur the count
+    val corpus = CorpusGen.generate(spark, sf = 0.003, seed = 11L).cache()
+    corpus.count()
+    val pipe = new DedupPipeline(spark)
+    // ids of the persistent-RDD registry, not getRDDStorageInfo: the latter
+    // reads the listener-fed status store, which lags block updates, while
+    // unpersist removes an RDD from the registry synchronously. Only NEW ids
+    // count — the context cleaner may drop older unreachable ones any time.
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val beforePairs = persisted
+    val pairs = pipe.dupPairs(corpus, fromHtml = true)
+    assert((persisted -- beforePairs).size == 1, "dupPairs keeps only its returned checkpoint")
+    val beforeRun = persisted
+    val clusters = pipe.run(corpus, fromHtml = true)
+    clusters.count()
+    assert((persisted -- beforeRun).size == 1,
+      "run keeps only the signature cache its returned assignment reads")
+    assert(pairs.count() > 0 && clusters.count() > 0)
+    corpus.unpersist()
   }
 
   test("doc_id collision audit re-keys colliding urls deterministically") {
@@ -407,6 +477,15 @@ class DedupJobSpec extends SparkTestBase {
     intercept[IllegalArgumentException] { // stream needs a checkpoint
       graft.DedupJob.parse(Array("--input", "i", "--output", "o", "--stream"))
     }
+  }
+
+  test("--jaccard-verify with --incremental is a usage error") {
+    // the probe has no stored text to verify against
+    val e = intercept[IllegalArgumentException] {
+      graft.DedupJob.parse(Array("--input", "i", "--output", "o", "--checkpoint", "c",
+        "--incremental", "b", "--jaccard-verify"))
+    }
+    assert(e.getMessage.contains("--jaccard-verify"))
   }
 
   test("rolling incremental mode: probe-only batches track the full-batch answer") {
