@@ -64,16 +64,18 @@ object DedupOps {
       .withColumn("orig_id", expr("cast(substring(url, 4) as long)"))
       .cache()
     val idMap = sigs0.select("doc_id", "orig_id")
-    val pairsRaw = pipe.dupPairsFromSigs(sigs0.drop("orig_id"))
-    val out = pairsRaw
+    val graph = pipe.pairGraph(sigs0.drop("orig_id"))
+    val out = graph.pairs
       .join(idMap.withColumnRenamed("doc_id", "src").withColumnRenamed("orig_id", "ida"), "src")
       .join(idMap.withColumnRenamed("doc_id", "dst").withColumnRenamed("orig_id", "idb"), "dst")
       .select(least(col("ida"), col("idb")).as("doc_id_a"),
         greatest(col("ida"), col("idb")).as("doc_id_b"), col("score"))
       .distinct()
-      // eager cut-over: pairs are small; dropping the signature cache NOW
-      // avoids pinning one full sig table per call for the session lifetime
+      // eager cut-over: pairs are small; dropping the signature cache and
+      // the producer's rep checkpoint NOW avoids pinning them per call for
+      // the session lifetime
       .localCheckpoint(true)
+    graph.release()
     sigs0.unpersist()
     out
   }

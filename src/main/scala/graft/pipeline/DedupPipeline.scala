@@ -13,9 +13,10 @@ import graft.ledger.Ledger
   *
   *   extract → shingle → MinHash(64×8-bit segmented) + SimHash64 →
   *   exact-hash channel (pichash analog, implies-match pruning) →
-  *   LSH band explode {4:20} → skew-aware candidate generation (group caps,
-  *   map-side partial counts, AQE skew join) → signature verification
-  *   (positional equality > 50) [+ exact k-gram Jaccard] →
+  *   LSH band explode {4:20} → skew-capped candidate generation (one lazy
+  *   plan: map-side local cap, one key shuffle, stop-band groups) →
+  *   signature verification (positional equality > 50) [+ exact k-gram
+  *   Jaccard] →
   *   large-star/small-star connected components → (url, cluster_id).
   *
   * One pair producer (`pairGraph`) owns the middle of that chain, from a
@@ -31,11 +32,14 @@ import graft.ledger.Ledger
   *  - Exact-dup docs collapse to one representative BEFORE banding
   *    (≅ PICHASH_IMPLIES_MINHASH_MATCH, MinHashConfig.py:35) — verbatim dups
   *    (a large share of web text) never enter the quadratic path.
-  *  - Candidate generation: per-(band_id, band_hash) groups; group sizes are
-  *    counted with a partial-aggregating groupBy (hot keys combine map-side),
-  *    groups above `maxBandGroupSize` are dropped as stop-bands (boilerplate
-  *    collisions would be quadratic; other bands + the exact channel keep
-  *    recall), remaining pairs emitted via sorted-group flatMap.
+  *  - Candidate generation: per-(band_id, band_hash) groups in ONE lazy
+  *    plan with no cache, detection pass or checkpoint of its own; a
+  *    map-side local cap ships at most cap+1 postings per key per map
+  *    partition, groups above `maxBandGroupSize` are dropped as stop-bands
+  *    at the reducer (boilerplate collisions would be quadratic; other
+  *    bands + the exact channel keep recall), remaining pairs are emitted
+  *    per sorted group and counted per (a, b). The table fuses into the
+  *    first action that consumes it.
   *  - Verification joins pick broadcast vs sort-merge via Catalyst/AQE stats.
   */
 final case class PipelineOptions(
@@ -59,10 +63,11 @@ final case class PipelineOptions(
     // 10^12-doc design point) — one cheap partial-aggregated count shuffle
     auditIds: Boolean = true,
     // opt-in EXACT two-phase heavy-hitter exclusion before the candidate
-    // shuffle: catches over-cap band keys whose postings are spread so thin
-    // that no single map partition proves them hot. Mega-hot bands
-    // (provably over cap within one partition) are ALWAYS auto-excluded,
-    // flag or not — see pairsFromBands' provably-hot pass.
+    // shuffle: over-cap band keys ship no postings at all. Without it the
+    // always-on map-side local cap still bounds a mega-hot band to cap+1
+    // postings per map partition, and the reducer drops the group — the
+    // output is the same either way. Turn on for corpora known to carry
+    // mega-hot bands.
     hotBandPrefilter: Boolean = false,
     numPartitions: Int = 0 // 0 = leave to session default
 )
@@ -470,18 +475,18 @@ final class DedupPipeline(
     * and the LSH channel's verified pairs (a, b, score, hamming, n_bands,
     * jaccard — the stored schema of the "verified" ledger stage; jaccard is
     * null unless the caller passed text). Both tables are lazy. The
-    * producer's ephemeral checkpoints (the shared rep table and the
-    * candidate table) stay pinned until `release()`, which a caller invokes
-    * once every consumer of both tables has materialized.
+    * producer's one ephemeral checkpoint, the shared rep table, stays
+    * pinned until `release()`, which a caller invokes once every consumer
+    * of both tables has materialized.
     */
   private[graft] final class PairGraph(val exactEdges: DataFrame, val verified: DataFrame,
-      checkpoints: Seq[DataFrame]) {
+      repCheckpoint: Option[DataFrame]) {
     /** Both channels in one (src, dst, score, hamming, flags) table. */
     def pairs: DataFrame = DedupPipeline.unionDisjointChannels(
       verified.select(col("a").as("src"), col("b").as("dst"), col("score"), col("hamming")),
       exactEdges)
 
-    def release(): Unit = checkpoints.foreach(DedupPipeline.releaseCheckpoint)
+    def release(): Unit = repCheckpoint.foreach(DedupPipeline.releaseCheckpoint)
   }
 
   /** `f` as ledger stage `name` when `stages` is set, plain otherwise. */
@@ -526,27 +531,23 @@ final class DedupPipeline(
         if (opts.numPartitions > 0) opts.numPartitions
         else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
     }
-    pairTail(bandTable, sigs0.where(col("hashable")), exactEdges, stages, text,
-      identity, Seq(reps))
+    new PairGraph(exactEdges,
+      pairTail(bandTable, sigs0.where(col("hashable")), stages, text, identity), Some(reps))
   }
 
-  /** The producer's candidate → verify → union tail over a band table.
-    * `keep` filters the candidate pairs before verification (the probe
-    * keeps only pairs touching its new batch); `sigs` holds the hashable
-    * signatures of every doc the band table names.
+  /** The producer's candidate → verify tail over a band table: the
+    * verified LSH pairs, lazy. `keep` filters the candidate pairs before
+    * verification (the probe keeps only pairs touching its new batch);
+    * `sigs` holds the hashable signatures of every doc the band table names.
     */
-  private def pairTail(bands: DataFrame, sigs: DataFrame, exactEdges: DataFrame,
-      stages: Option[Ledger], text: Option[DataFrame], keep: DataFrame => DataFrame,
-      checkpoints: Seq[DataFrame]): PairGraph = {
-    var candidateCheckpoint = Seq.empty[DataFrame]
+  private def pairTail(bands: DataFrame, sigs: DataFrame, stages: Option[Ledger],
+      text: Option[DataFrame], keep: DataFrame => DataFrame): DataFrame = {
     val candidates = stage(stages, "candidates",
         s"cap=${opts.maxBandGroupSize},r=${cfg.bandMatchesRequired}", Seq("bands")) {
-      val c = candidateStage(bands, cfg.bandMatchesRequired)
-      candidateCheckpoint = Seq(c)
-      c
+      candidateStage(bands, cfg.bandMatchesRequired)
     }
     val verified0 = verifyStage(keep(candidates), sigs)
-    val verified = stage(stages, "verified",
+    stage(stages, "verified",
         s"thr=${cfg.matchingThreshold},jac=${opts.jaccardVerify}," +
           s"jthr=${opts.jaccardThreshold},shfloor=${opts.simHashScoreFloor}," +
           s"shmax=${opts.simHashMaxHamming}",
@@ -556,7 +557,6 @@ final class DedupPipeline(
         case None => verified0.withColumn("jaccard", lit(null).cast("double"))
       }
     }
-    new PairGraph(exactEdges, verified, checkpoints ++ candidateCheckpoint)
   }
 
   /** Text for the producer's Jaccard verification, when it is on. */
@@ -587,15 +587,16 @@ final class DedupPipeline(
     // dirty verdict (checked after the optimistic build materialized)
     // discards that work and rebuilds on the repaired ids. Measured: the
     // serial audit was ~1-1.5 s of the ~10 s bench-corpus run, a full
-    // barrier chain that the candidate stage now hides entirely. Ledgered
+    // barrier chain that the overlapped pipeline now hides entirely. Ledgered
     // runs keep the sequential audit: stage descriptors are
     // content-independent, so an optimistic "candidates" stage written from
-    // unrepaired ids would be served VERBATIM to the rebuild.
+    // unrepaired ids would be served VERBATIM to the rebuild. The audit
+    // gets its own daemon thread: on a shared pool it would wait for a free
+    // worker, and with every worker busy the await below would never return.
     val auditFuture: Option[scala.concurrent.Future[Boolean]] =
-      if (opts.auditIds && ledger.isEmpty) {
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Some(scala.concurrent.Future { hasIdCollisions(sigsRaw) })
-      } else None
+      if (opts.auditIds && ledger.isEmpty)
+        Some(DedupPipeline.onOwnThread(spark, "graft-id-audit")(hasIdCollisions(sigsRaw)))
+      else None
     val sigs0First =
       if (!opts.auditIds) sigsRaw
       else if (ledger.isDefined) resolveIdCollisions(sigsRaw, urlUnique = true)
@@ -643,7 +644,7 @@ final class DedupPipeline(
     val docs = extractStage(input, fromHtml)
     val sigs0 = signatureStage(docs).toDF().cache()
     // eager cut-over: verified pairs are cap-bounded and small; release the
-    // signature cache and the producer's checkpoints instead of pinning
+    // signature cache and the producer's rep checkpoint instead of pinning
     // them per call
     val graph = pairGraph(sigs0, text = jaccardText(docs))
     val out = graph.pairs.localCheckpoint(true)
@@ -721,8 +722,9 @@ final class DedupPipeline(
       oldSigs0: DataFrame, newSigs0: DataFrame): DataFrame = {
     val newIds = newSigs0.select("doc_id")
     val allHashable = oldSigs0.where(col("hashable")).unionByName(newSigs0.where(col("hashable")))
-    pairTail(parts.candInput, allHashable, parts.exactEdges, None, None,
-      touching(_, newIds, "a", "b"), Nil).pairs
+    new PairGraph(parts.exactEdges,
+      pairTail(parts.candInput, allHashable, None, None, touching(_, newIds, "a", "b")),
+      None).pairs
   }
 
   /** Rows of `pairs` whose `x` or `y` endpoint is in `ids` (doc_id), each
@@ -864,42 +866,21 @@ object DedupPipeline {
     }
   }
 
-  /** Band keys PROVABLY over the global stop-band cap: local count in some
-    * single map partition exceeds `cap` (⇒ global count does too). One
-    * narrow no-shuffle pass; per partition at most rows/(cap+1) keys can
-    * qualify, so the result is small and broadcastable. Package-private for
-    * the auto-prefilter test.
-    */
-  private[graft] def provablyHotKeys(spark: SparkSession,
-      keyed: Dataset[(Long, Long)], cap: Int): DataFrame = {
-    import spark.implicits._
-    val maxTracked = 4 << 20
-    // NO .distinct(): each partition emits a key at most once (exactly when
-    // its local count crosses cap+1), so duplicates are bounded by the map
-    // count — and the only consumer is a broadcast LEFT ANTI join, whose
-    // semantics ignore build-side duplicates. The former distinct() was one
-    // full exchange per pairsFromBands call (guide §2.4).
-    keyed.mapPartitions { it =>
-      val counts = new DedupPipeline.LongCounter(1 << 16)
-      val hot = scala.collection.mutable.ArrayBuffer.empty[Long]
-      it.foreach { case (k, _) =>
-        if (counts.incrBounded(k, maxTracked) == cap + 1) hot += k
-      }
-      hot.iterator
-    }.toDF("band_key")
-  }
-
   /** Shared skew-capped pair emission from a band table
     * (band_id, band_hash, doc_id) — used by the LSH candidate stage, the
     * phash Hamming channel and the ANN bucket channel.
     *
-    * One shuffle, streamed groups: hot groups are dropped at `cap` while
-    * streaming (stop-band policy — boilerplate bands would be quadratic), so
-    * no group ever materializes unbounded. Measured faster than both the
-    * sort-scan variant and a fully-declarative self-join (the SMJ buffers
-    * massive equal-key runs and sorts the band table twice). The
-    * (band_id, band_hash) key packs into one long (band hashes are 32-bit)
-    * — narrower shuffle rows, single-long grouping key.
+    * One lazy plan: band key → map-side local cap → one key shuffle →
+    * streamed pair emission → groupBy(a, b) count. Hot groups are dropped at
+    * `cap` while streaming (stop-band policy — boilerplate bands would be
+    * quadratic), so no group ever materializes unbounded. No cache, no
+    * extra detection pass and no checkpoint: the table fuses into the first
+    * action that consumes it, and the stop-band policy stays exact through
+    * the local cap alone. Measured faster than both the sort-scan variant
+    * and a fully-declarative self-join (the SMJ buffers massive equal-key
+    * runs and sorts the band table twice). The (band_id, band_hash) key
+    * packs into one long (`packedBandKey`) — narrower shuffle rows,
+    * single-long grouping key.
     */
   def pairsFromBands(spark: SparkSession, bands: DataFrame,
       cap: Int, bandMatchesRequired: Int, prefilterHot: Boolean = false): DataFrame = {
@@ -938,46 +919,18 @@ object DedupPipeline {
           .as[(Long, Long)]
       }
     val maxTracked = 4 << 20
-    // AUTO heavy-hitter exclusion, ALWAYS on (no flag) and exactly
-    // output-preserving: a key whose LOCAL count in any single map partition
-    // exceeds `cap` is PROVABLY over the global cap, and the reducer would
-    // drop its group regardless — so detect such keys with one narrow
-    // no-shuffle pass (the same LongCounter the local cap uses, emitting a
-    // key once when it crosses cap+1) and anti-join them out BEFORE the
-    // shuffle. A 10^7-member boilerplate band then ships ZERO postings
-    // instead of (cap+1)·numMapPartitions to one reducer. Keys over cap
-    // globally but under cap in every partition still ship (≤ cap+1 rows per
-    // map via the local cap below) and die at the reducer — catching those
-    // too is what the opt-in exact-count prefilter above is for. Untracked
-    // keys (tracking map overflow) can't be proven hot and pass through.
-    //
-    // The detection pass and the main pass both consume the band explode, so
-    // cache it (serialized: 16-byte rows) around the two passes — measured
-    // ~2 s of duplicated banding UDF work at bench scale otherwise. Cache is
-    // best-effort by design: at the 10^12 design point partitions that don't
-    // fit memory+disk silently recompute from the (ledger-materialized)
-    // signature table, which is exactly the no-cache behavior.
-    val cached =
-      if (prefilterHot) input // the exact-count phase already removed a superset
-      else input.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val preFiltered =
-      if (prefilterHot) input
-      else cached.toDF("band_key", "doc_id")
-        .join(broadcast(provablyHotKeys(spark, cached, cap)), Seq("band_key"), "left_anti")
-        .as[(Long, Long)]
     // map-side stop-band combiner, ALWAYS on and exactly output-preserving:
     // a key whose LOCAL count exceeds `cap` is globally over cap, and cap+1
     // delivered rows are already enough to make the reducer drop the group —
     // so suppress everything past cap+1 per key per map partition. A
-    // boilerplate band that dodged the provable-hot pass (e.g. untracked on
-    // map overflow) still ships ≤ (cap+1)·numMapPartitions postings instead
-    // of its full volume. Equivalence: a group is dropped iff its
-    // reducer-side count exceeds cap — if any partition crossed cap it alone
-    // delivers cap+1 (> cap ⇒ dropped, same as before); if none crossed,
-    // delivery is complete and the reducer count is the true count. Tracking
-    // map is size-bounded; on overflow new keys pass through untracked (the
+    // boilerplate band ships ≤ (cap+1)·numMapPartitions postings instead of
+    // its full volume. Equivalence: a group is dropped iff its reducer-side
+    // count exceeds cap — if any partition crossed cap it alone delivers
+    // cap+1 (> cap ⇒ dropped, same as before); if none crossed, delivery is
+    // complete and the reducer count is the true count. Tracking map is
+    // size-bounded; on overflow new keys pass through untracked (the
     // reducer-side cap stays the backstop).
-    val localCapped = preFiltered.mapPartitions { it =>
+    val localCapped = input.mapPartitions { it =>
       val counts = new DedupPipeline.LongCounter(1 << 16)
       it.filter { case (k, _) =>
         val c = counts.incrBounded(k, maxTracked)
@@ -1005,21 +958,8 @@ object DedupPipeline {
         }
       }
       .toDF("a", "b")
-    val result = pairs.groupBy("a", "b").agg(count(lit(1)).as("n_bands"))
+    pairs.groupBy("a", "b").agg(count(lit(1)).as("n_bands"))
       .where(col("n_bands") >= bandMatchesRequired)
-    if (prefilterHot) result
-    else {
-      // eager cut-over so the band-explode cache can be dropped NOW: without
-      // this every candidateStage/phash/ANN call leaks one pinned serialized
-      // explode (16 B × postings) for the session lifetime. The ≥r-band pair
-      // table is cap-bounded and far smaller than the cache it frees; at the
-      // 10^12 design point the candidates stage is ledger-staged to reliable
-      // parquet anyway, so the ephemeral localCheckpoint is bench/local-only
-      // state.
-      val out = result.localCheckpoint(eager = true)
-      cached.unpersist()
-      out
-    }
   }
 
   /** A4 analog — the channel merge of the pair producer: LSH pairs carry
@@ -1048,6 +988,22 @@ object DedupPipeline {
     val e = exactEdges.select(col("src"), col("dst"),
       lit(100.0).as("score"), lit(0).as("hamming"), lit(FlagExact).as("flags"))
     l.unionByName(e)
+  }
+
+  /** Runs `f` on a daemon thread started for this call. The thread is
+    * created by the caller, so it inherits the caller's Spark local
+    * properties (job group, description, scheduler pool) through Spark's
+    * inheritable thread-locals; the active session is set explicitly. */
+  private[graft] def onOwnThread[T](spark: SparkSession, name: String)(
+      f: => T): scala.concurrent.Future[T] = {
+    val done = scala.concurrent.Promise[T]()
+    val t = new Thread(() => {
+      SparkSession.setActiveSession(spark)
+      try done.success(f) catch { case e: Throwable => done.failure(e) }
+    }, name)
+    t.setDaemon(true)
+    t.start()
+    done.future
   }
 
   /** Drops the blocks behind a `localCheckpoint`ed frame; a no-op for any

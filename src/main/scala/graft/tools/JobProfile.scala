@@ -15,6 +15,13 @@ object JobProfile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
     val names = args.drop(2).toSeq
+    val known = graft.SparkEntry.queries.keySet
+    val unknown = names.filterNot(known)
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown query: ${unknown.mkString(", ")}; known: " +
+        known.toSeq.sorted.mkString(", "))
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = BenchExtra.mkSession(cpus, cpus)
 
@@ -48,7 +55,7 @@ object JobProfile {
         val df = fn(spark, sfDir)
         val n = df.count()
         val dt = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // drain listener
+        if (live) Thread.sleep(300) // drain listener before the job lines end
         println(f"TIME $name rep$r $dt%.3f s rows=$n")
       }
     }

@@ -228,36 +228,30 @@ class DedupPipelineSpec extends SparkTestBase {
       "hot-group members must not pair")
   }
 
-  test("mega-hot bands are auto-excluded pre-shuffle, no flag needed") {
+  test("mega-hot band groups are dropped under any partitioning") {
     import spark.implicits._
     val cap = 10
-    // hot key: 3·cap postings in ONE partition → provably over the global cap
+    // hot key: 3·cap postings, all in one map partition or spread thin over
+    // 16 — the local cap and the reducer drop it either way
     val hot = (0 until 3 * cap).map(i => (5, 99L, i.toLong))
     val cold = Seq((6, 10L, 1L), (6, 10L, 2L))
-    def keyed(parts: Int) = (hot ++ cold).toDF("band_id", "band_hash", "doc_id")
-      .repartition(parts)
-      .select(DedupPipeline.packedBandKey(col("band_id"), col("band_hash")).as("band_key"),
-        col("doc_id"))
-      .as[(Long, Long)]
-    // expected key via the same packing the pipeline uses
-    val packedHot = Seq((5, 99L)).toDF("band_id", "band_hash")
-      .select(DedupPipeline.packedBandKey(col("band_id"), col("band_hash")))
-      .as[Long].collect()(0)
-    val found = DedupPipeline.provablyHotKeys(spark, keyed(1), cap)
-      .as[Long].collect().toSet
-    assert(found == Set(packedHot), s"detector must flag exactly the mega-hot key: $found")
-    // spread across 16 partitions the local counts stay ≤ cap: not provable —
-    // the map-side cap + reducer drop remain the backstop, output unchanged
-    val thin = DedupPipeline.provablyHotKeys(spark, keyed(16), cap)
-      .as[Long].collect().toSet
-    assert(thin.isEmpty, s"sub-cap local counts must not be flagged: $thin")
-    // e2e either way: hot group contributes nothing, cold pair survives
     for (parts <- Seq(1, 16)) {
       val bands = (hot ++ cold).toDF("band_id", "band_hash", "doc_id").repartition(parts)
       val got = DedupPipeline.pairsFromBands(spark, bands, cap, bandMatchesRequired = 1)
         .select("a", "b").as[(Long, Long)].collect().toSet
       assert(got == Set((1L, 2L)), s"parts=$parts: $got")
     }
+  }
+
+  test("pairsFromBands is one lazy plan: nothing cached or checkpointed") {
+    import spark.implicits._
+    val bands = Seq((1, 10L, 1L), (1, 10L, 2L), (2, 11L, 1L), (2, 11L, 2L))
+      .toDF("band_id", "band_hash", "doc_id")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val pairs = DedupPipeline.pairsFromBands(spark, bands, cap = 500, bandMatchesRequired = 2)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet -- before == Set.empty,
+      "building the candidate table must not pin anything")
+    assert(pairs.as[(Long, Long, Long)].collect().toSeq == Seq((1L, 2L, 2L)))
   }
 
   test("LongCounter: exact counts through growth, bounded tracking honored") {
@@ -387,6 +381,23 @@ class DedupPipelineSpec extends SparkTestBase {
     assert((persisted -- beforeRun).size == 1,
       "run keeps only the signature cache its returned assignment reads")
     assert(pairs.count() > 0 && clusters.count() > 0)
+    // the operator surface over the same producer
+    val docs = corpus.select(xxhash64(col("url")).as("doc_id"), col("text"))
+    val beforeMinhash = persisted
+    val mhPairs = graft.ops.DedupOps.minhashPairs(spark, docs)
+    assert((persisted -- beforeMinhash).size == 1,
+      "minhashPairs keeps only its returned checkpoint")
+    assert(mhPairs.count() > 0)
+    // the probe: a lazy frame that pins nothing once its output is counted
+    val sigs = pipe.signatureStage(pipe.extractStage(corpus, fromHtml = true)).toDF()
+      .localCheckpoint(eager = true)
+    val oldSigs = sigs.where(pmod(col("doc_id"), lit(4)) =!= 0)
+    val newSigs = sigs.where(pmod(col("doc_id"), lit(4)) === 0)
+    val beforeProbe = persisted
+    val probed = pipe.probeDupPairs(oldSigs, newSigs)
+    assert(probed.count() > 0)
+    assert((persisted -- beforeProbe).isEmpty, "the probe pins nothing")
+    DedupPipeline.releaseCheckpoint(sigs)
     corpus.unpersist()
   }
 
@@ -430,6 +441,42 @@ class DedupPipelineSpec extends SparkTestBase {
     intercept[IllegalStateException] {
       pipe.resolveIdCollisions(dupUrls, urlUnique = true).collect()
     }
+  }
+
+  test("run() finishes while every global-pool worker is blocked") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val rows = spark.createDataFrame(Seq(
+      ("u1", (1 to 40).map(i => s"alpha$i").mkString(" ")),
+      ("u2", (1 to 40).map(i => s"alpha$i").mkString(" ")),
+      ("u3", (1 to 40).map(i => s"beta$i").mkString(" ")))).toDF("url", "text")
+    // park a task on every worker of the global pool; the surplus queues
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val workers = Runtime.getRuntime.availableProcessors()
+    for (_ <- 0 until 4 * workers)
+      Future { started.incrementAndGet(); release.await() }(ExecutionContext.global)
+    try {
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (started.get() < workers && System.nanoTime() < deadline) Thread.sleep(20)
+      val runner = new java.util.concurrent.FutureTask(() =>
+        new DedupPipeline(spark).run(rows, fromHtml = false).collect()
+          .map(r => r.getString(0) -> r.getLong(2)).toMap)
+      val t = new Thread(runner, "run-under-saturated-pool")
+      t.setDaemon(true)
+      t.start()
+      val out = runner.get(120, java.util.concurrent.TimeUnit.SECONDS)
+      assert(out("u1") == out("u2") && out("u3") != out("u1"))
+    } finally release.countDown()
+    // the audit thread carries the caller's job group and active session
+    spark.sparkContext.setJobGroup("audit-group", "audit")
+    try {
+      val seen = Await.result(DedupPipeline.onOwnThread(spark, "probe-thread") {
+        (spark.sparkContext.getLocalProperty("spark.jobGroup.id"),
+          org.apache.spark.sql.SparkSession.getActiveSession)
+      }, 30.seconds)
+      assert(seen == (("audit-group", Some(spark))))
+    } finally spark.sparkContext.clearJobGroup()
   }
 }
 

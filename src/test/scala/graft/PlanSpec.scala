@@ -216,9 +216,8 @@ class PlanSpec extends SparkTestBase {
     // an Aggregate over the old signature table with no Join beneath it is a
     // corpus-wide re-aggregation — the persisted-index probe must restrict
     // the old side to batch-touched groups (a semi join) BEFORE any groupBy.
-    // Asserted on the ProbeParts members (pre-candidate-stage): the
-    // candidate stage eagerly materializes to a LogicalRDD, which would
-    // hide the offending subtree from the final plan.
+    // Asserted on each ProbeParts member and on the full probe plan: the
+    // candidate stage is lazy, so the final plan shows every subtree.
     def corpusWideAggs(df: org.apache.spark.sql.DataFrame): Seq[Aggregate] =
       df.queryExecution.optimizedPlan.collect {
         case a: Aggregate if scansOldSigs(a.child) &&
@@ -231,12 +230,17 @@ class PlanSpec extends SparkTestBase {
       assert(corpusWideAggs(df).isEmpty,
         s"indexed probe re-aggregates the old corpus in $what:\n" +
           df.queryExecution.optimizedPlan)
+    val probed = pipe.probeDupPairs(oldSigs, newSigs, Some(oldBands))
+    assert(corpusWideAggs(probed).isEmpty,
+      s"indexed probe re-aggregates the old corpus:\n${probed.queryExecution.optimizedPlan}")
     // positive control: the index-less fallback DOES pay that aggregation
-    // (documented), proving this test detects it
+    // (documented), proving this test detects it, in its parts and in the
+    // full probe plan
     val fallback = pipe.probeParts(oldSigs, newSigs, None)
-    assert(corpusWideAggs(fallback.candInput).nonEmpty,
-      "detector lost sight of the fallback's corpus-wide aggregation — " +
-        "if the fallback no longer re-aggregates, update the probeParts docs")
+    for (df <- Seq(fallback.candInput, pipe.probeDupPairs(oldSigs, newSigs, None)))
+      assert(corpusWideAggs(df).nonEmpty,
+        "detector lost sight of the fallback's corpus-wide aggregation — " +
+          "if the fallback no longer re-aggregates, update the probeParts docs")
   }
 
   test("small dimension joins broadcast (Catalyst stats/AQE)") {
