@@ -20,7 +20,10 @@ import graft.tools.DedupRunOne
   */
 object Bench {
 
-  private def mkSession(cores: Int, shufflePartitions: Int): SparkSession = {
+  /** The one benchmark/diagnostic session: `local[cores]` with the
+    * settings below. `BenchExtra`, `DedupRunOne` and the profiling tools
+    * use it too, so their timings transfer to the bench's. */
+  private[graft] def mkSession(cores: Int, shufflePartitions: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val s = SparkSession.builder()
@@ -112,7 +115,7 @@ object Bench {
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] pinned fork failed (${e.getMessage}); running in-process")
-        val spark = DedupRunOne.mkSession(cores, shuffleParts)
+        val spark = mkSession(cores, shuffleParts)
         try DedupRunOne.timedRun(spark, corpusPath, warmupPath)
         finally spark.stop()
     }

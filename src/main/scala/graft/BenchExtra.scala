@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-7 measurement harness (guide §1): times individual SparkEntry
   * queries under EXACTLY the session configuration `graft.Bench` uses, with
   * both the bench action (`count()`, what the frozen Bench times) and the
@@ -26,29 +24,6 @@ object BenchExtra {
     "q_pii_redact", "q_url_filter", "q_split_assign", "q_repetition",
     "q_c4_rules")
 
-  /** Same settings as Bench.mkSession — timings here must transfer there. */
-  def mkSession(cores: Int, shufflePartitions: Int): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-benchextra-$cores")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "96m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "96m")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -64,7 +39,7 @@ object BenchExtra {
     val names = if (names0.isEmpty) headline else names0
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
-    val spark = mkSession(cpus, cpus)
+    val spark = Bench.mkSession(cpus, cpus)
     // Plan capture via QueryExecutionListener: several queries end in an
     // eager localCheckpoint, so their own `explain` is just a Scan
     // ExistingRDD — the REAL plans are the ones executed while the query

@@ -130,6 +130,11 @@ object DedupJob {
       s"--state-store must be rocksdb or hdfs, got: ${a.stateStore}")
     require(a.compactEvery > 0,
       s"--compact-every must be positive, got: ${a.compactEvery}")
+    require(a.opts.maxBandGroupSize >= 2,
+      "--max-band-group must be >= 2 (a smaller cap drops every band group, " +
+        s"so the LSH channel emits nothing), got: ${a.opts.maxBandGroupSize}")
+    require(a.maxFilesPerTrigger >= 0,
+      s"--max-files-per-trigger must be >= 0 (0 = source default), got: ${a.maxFilesPerTrigger}")
     a
   }
 
@@ -517,12 +522,11 @@ object DedupJob {
     *   - TAIL `<output>/pairs`: at-most-once near-dup pairs over the same
     *     first-seen rows
     *
-    * Because both tails consume the head's sink, every output references
-    * the SAME elected representative per content — running the three
-    * per-surface streams side by side instead would sign every doc once
-    * per query and keep three independent first-seen states whose
-    * micro-batch boundaries could elect different reps after a mid-drain
-    * restart.
+    * Both tails consume the head's sink rather than signing `--input`
+    * themselves: every doc is signed once (signing is the dominant per-doc
+    * CPU), and there is ONE first-seen state, so every output references
+    * the SAME elected representative per content — independent first-seen
+    * states per query could elect different reps after a mid-drain restart.
     *
     * `--trigger-once` processes everything available and stops
     * (Trigger.AvailableNow — the cron-shaped deployment and the testable

@@ -247,14 +247,21 @@ final class DedupPipeline(
     * them. One narrow-row shuffle (~100 B/doc), only paid by the batch
     * path (the streaming path dedups in state).
     */
-  def signatureStage(docs: DataFrame): Dataset[DocSig] = {
+  def signatureStage(docs: DataFrame): Dataset[DocSig] =
+    signRows(docs).groupByKey(_.url)
+      .reduceGroups((a, b) => if (DocSig.rowOrder(a, b) >= 0) a else b)
+      .map(_._2)
+
+  /** The per-doc kernel pass alone: (url, text) → one `DocSig` per input
+    * row, no url collapse. Stateless, so it also signs a streaming
+    * DataFrame (the cascade head `StreamingIndex.sigVerdictStream`).
+    */
+  private[graft] def signRows(docs: DataFrame): Dataset[DocSig] = {
     val bcCfg = spark.sparkContext.broadcast(cfg)
-    val signed = docs.select("url", "text").as[(String, String)].mapPartitions { it =>
+    docs.select("url", "text").as[(String, String)].mapPartitions { it =>
       val k = new DocSig.Kernel(bcCfg.value)
       it.map { case (url, text) => k.compute(url, text) }
     }
-    signed.groupByKey(_.url).reduceGroups((a, b) => if (DocSig.rowOrder(a, b) >= 0) a else b)
-      .map(_._2)
   }
 
   // ---- exact channel (pichash analog) ---------------------------------
@@ -918,6 +925,19 @@ object DedupPipeline {
           .join(broadcast(hot), Seq("band_key"), "left_anti")
           .as[(Long, Long)]
       }
+    cappedKeyPairs(spark, input, cap).groupBy("a", "b").agg(count(lit(1)).as("n_bands"))
+      .where(col("n_bands") >= bandMatchesRequired)
+  }
+
+  /** Skew-capped pair emission over (key, doc_id) postings: every pair
+    * (a < b) of docs sharing a key, with keys holding more than `cap` docs
+    * dropped as stop-keys. Shared by `pairsFromBands` (band keys) and
+    * `SubstringStage.candidatePairs` (winnowed anchors); a pair sharing
+    * several keys emits once per key.
+    */
+  private[graft] def cappedKeyPairs(spark: SparkSession, keyed: Dataset[(Long, Long)],
+      cap: Int): DataFrame = {
+    import spark.implicits._
     val maxTracked = 4 << 20
     // map-side stop-band combiner, ALWAYS on and exactly output-preserving:
     // a key whose LOCAL count exceeds `cap` is globally over cap, and cap+1
@@ -930,16 +950,17 @@ object DedupPipeline {
     // complete and the reducer count is the true count. Tracking map is
     // size-bounded; on overflow new keys pass through untracked (the
     // reducer-side cap stays the backstop).
-    val localCapped = input.mapPartitions { it =>
+    val localCapped = keyed.mapPartitions { it =>
       val counts = new DedupPipeline.LongCounter(1 << 16)
       it.filter { case (k, _) =>
         val c = counts.incrBounded(k, maxTracked)
         c == -1 || c <= cap + 1
       }
     }
-    val pairs = localCapped
+    localCapped
       .groupByKey(_._1)
       .flatMapGroups { (_: Long, rows: Iterator[(Long, Long)]) =>
+        // stream with early overflow — never materialize an over-cap group
         val ids = new scala.collection.mutable.ArrayBuffer[Long](64)
         var overflow = false
         while (rows.hasNext) {
@@ -958,8 +979,6 @@ object DedupPipeline {
         }
       }
       .toDF("a", "b")
-    pairs.groupBy("a", "b").agg(count(lit(1)).as("n_bands"))
-      .where(col("n_bands") >= bandMatchesRequired)
   }
 
   /** A4 analog — the channel merge of the pair producer: LSH pairs carry

@@ -92,12 +92,12 @@ object SubstringStage {
   private def mix(x: Long): Long = graft.hash.SimHash.mix64(x ^ 1125899906842597L)
 
   /** Candidate pairs (a < b, distinct) from shared winnowed anchors over
-    * `hashed` (doc_id, hashes), with the stop-anchor cap for boilerplate.
-    * Map-side local cap first (same trick as DedupPipeline.pairsFromBands,
-    * exactly output-preserving): a key over cap locally is globally over
-    * cap, and cap+1 delivered rows already force the reducer drop — so a
-    * mega-hot boilerplate anchor ships ≤ (cap+1)·maps rows instead of its
-    * whole posting list to one reducer. (anchor rows are distinct on
+    * `hashed` (doc_id, hashes), with the stop-anchor cap for boilerplate:
+    * the capped pair emitter of the band candidate stage
+    * (`DedupPipeline.cappedKeyPairs` — map-side local cap, one key shuffle,
+    * sorted pair emission) over (anchor, doc_id) rows, so a mega-hot
+    * boilerplate anchor ships ≤ (cap+1)·maps rows instead of its whole
+    * posting list to one reducer. (anchor rows are distinct on
     * (anchor, doc_id), so group size IS the distinct-doc count.)
     * Shared by the detection (`run`) and rewrite (`SpanDedup`) surfaces.
     */
@@ -113,35 +113,8 @@ object SubstringStage {
     val anchorRows = hashed.select(col("doc_id"), col("hashes")).as[(Long, Array[Int])]
       .flatMap { case (id, hs) => anchors(hs, w, wn).map(a => (a, id)) }
       .toDF("anchor", "doc_id")
-    val cap = maxAnchorGroup
-    val capped = anchorRows.as[(Long, Long)].mapPartitions { it =>
-      val counts = new graft.pipeline.DedupPipeline.LongCounter(1 << 12)
-      val maxTracked = 4 << 20
-      it.filter { case (k, _) =>
-        val c = counts.incrBounded(k, maxTracked)
-        c == -1 || c <= cap + 1
-      }
-    }
-    capped
-      .groupByKey(_._1)
-      .flatMapGroups { (_: Long, rows: Iterator[(Long, Long)]) =>
-        // stream with early overflow — never materialize an over-cap group
-        val ids = new scala.collection.mutable.ArrayBuffer[Long](64)
-        var overflow = false
-        while (rows.hasNext) {
-          val id = rows.next()._2
-          if (!overflow) { ids += id; if (ids.length > cap) overflow = true }
-        }
-        if (overflow || ids.length < 2) Iterator.empty
-        else {
-          val arr = ids.toArray
-          java.util.Arrays.sort(arr)
-          arr.indices.iterator.flatMap(i =>
-            ((i + 1) until arr.length).iterator.map(j => (arr(i), arr(j))))
-        }
-      }
-      .toDF("a", "b")
-      .distinct()
+    graft.pipeline.DedupPipeline.cappedKeyPairs(spark, anchorRows.as[(Long, Long)],
+      maxAnchorGroup).distinct()
   }
 
   /** Pairs of docs sharing a long verbatim token run, with the exact longest

@@ -27,7 +27,7 @@ object CCProfile {
   def main(args: Array[String]): Unit = {
     val corpusSf = if (args.nonEmpty) args(0).toDouble else 2.5
     val corpusPath = graft.Bench.ensureCorpus(corpusSf)
-    val spark = DedupRunOne.mkSession(32, 32)
+    val spark = graft.Bench.mkSession(32, 32)
     import spark.implicits._
     try {
       // ---- real bench-corpus edges (exact ∪ verified-LSH, what run() clusters) ----

@@ -12,28 +12,6 @@ import graft.pipeline.DedupPipeline
   */
 object DedupRunOne {
 
-  def mkSession(cores: Int, shufflePartitions: Int): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-dedup-$cores")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "96m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "96m")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   /** warm-up + timed run; returns (docs, seconds, clusters). */
   def timedRun(spark: SparkSession, corpusPath: String, warmupPath: String): (Long, Double, Long) = {
     val warm = spark.read.parquet(warmupPath)
@@ -51,7 +29,7 @@ object DedupRunOne {
   def main(args: Array[String]): Unit = {
     require(args.length == 4, "usage: DedupRunOne <corpus> <warmup> <cores> <shuffleParts>")
     val Array(corpusPath, warmupPath, cores, parts) = args
-    val spark = mkSession(cores.toInt, parts.toInt)
+    val spark = graft.Bench.mkSession(cores.toInt, parts.toInt)
     try {
       val (docs, secs, clusters) = timedRun(spark, corpusPath, warmupPath)
       println(f"RESULT $docs $secs%.3f $clusters")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import graft.BenchExtra
 
 /** Warm per-Spark-job breakdown of one SparkEntry query: runs the query
   * `reps` times under the Bench session config with a listener that prints
@@ -23,7 +22,7 @@ object JobProfile {
       sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = BenchExtra.mkSession(cpus, cpus)
+    val spark = graft.Bench.mkSession(cpus, cpus)
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     @volatile var live = false

@@ -42,7 +42,7 @@ object StreamProfile {
     val root = Files.createTempDirectory("graft-streamprof").toFile.getAbsolutePath
     val in = s"$root/in"
     new File(in).mkdirs()
-    val spark = DedupRunOne.mkSession(32, 32)
+    val spark = graft.Bench.mkSession(32, 32)
     try {
       for (f <- new File(corpusPath).listFiles if f.getName.endsWith(".parquet"))
         Files.createLink(Paths.get(in, f.getName), f.toPath)

@@ -498,37 +498,58 @@ class ReportOpsSpec extends SparkTestBase {
 
 class StreamingSpec extends SparkTestBase {
   import spark.implicits._
+  import graft.pipeline.DocSig
+
+  /** A doc signed by the batch kernel — the row shape the cascade tails
+    * read from the head's sink. */
+  private def signed(url: String, text: String): DocSig =
+    new DocSig.Kernel(graft.kernel.GraftConfig.default).compute(url, text)
+
+  /** The production cascade in one query: head → first-seen hashable
+    * rows → band tail (`DedupJob.runStream` runs the same chain through
+    * the head's parquet sink). */
+  private def firstSeenReps(docs: org.apache.spark.sql.DataFrame) =
+    graft.streaming.StreamingIndex.sigVerdictStream(spark, docs).toDF()
+      .where(col("first_seen") && col("hashable"))
 
   test("streaming signature stage matches the batch computation") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, String)]
-    val docsStream = mem.toDF().toDF("url", "text")
-    val sigStream = graft.streaming.StreamingIndex.bandPostingsStream(spark, docsStream)
-    val q = sigStream.writeStream.format("memory").queryName("bands_stream")
-      .outputMode("append").start()
+    val cfg = graft.kernel.GraftConfig.default
     val text = (1 to 40).map(i => s"tok$i word$i").mkString(" ")
-    mem.addData(("u1", text), ("u2", "short"))
-    q.processAllAvailable()
-    val got = spark.sql("select * from bands_stream").collect()
-    q.stop()
+    for (((simHashChannel, maxHamming), i) <-
+        Seq((true, 2), (false, 2), (true, 3)).zipWithIndex) {
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[(String, String)]
+      val docsStream = mem.toDF().toDF("url", "text")
+      val sigStream = graft.streaming.StreamingIndex.bandPostingsFromSignedStream(spark,
+        firstSeenReps(docsStream), cfg, simHashChannel, maxHamming)
+      val q = sigStream.writeStream.format("memory").queryName(s"bands_stream_$i")
+        .outputMode("append").start()
+      mem.addData(("u1", text), ("u2", "short"))
+      q.processAllAvailable()
+      val got = spark.sql(s"select * from bands_stream_$i").collect()
+      q.stop()
 
-    // batch equivalent: minhash bands + simhash chunk tables (the stream
-    // now appends BOTH channels, matching what the batch probe expects)
-    val batch = new graft.pipeline.DedupPipeline(spark)
-    val sigs = batch.signatureStage(Seq(("u1", text)).toDF("url", "text")).toDF()
-    val hashable = sigs.where(col("hashable"))
-    val batchBands = batch.bandStage(hashable)
-      .unionByName(batch.simhashBandStage(hashable)).collect()
-    assert(got.length == batchBands.length) // u2 is unhashable → only u1 banded
-    assert(got.map(r => (r.getInt(1), r.getLong(2))).toSet ==
-      batchBands.map(r => (r.getInt(1), r.getLong(2))).toSet)
+      // batch equivalent: the batch band recipe under the same channel
+      // settings (minhash bands, plus the simhash chunk tables when that
+      // channel is on — what the batch probe expects)
+      val opts = graft.pipeline.PipelineOptions(simHashChannel = simHashChannel,
+        simHashMaxHamming = maxHamming)
+      val batch = new graft.pipeline.DedupPipeline(spark, cfg, opts)
+      val sigs = batch.signatureStage(Seq(("u1", text)).toDF("url", "text")).toDF()
+      val hashable = sigs.where(col("hashable"))
+      val batchBands = batch.bandsOf(hashable).collect()
+      assert(got.length == batchBands.length) // u2 is unhashable → only u1 banded
+      assert(got.map(r => (r.getInt(1), r.getLong(2))).toSet ==
+        batchBands.map(r => (r.getInt(1), r.getLong(2))).toSet)
+    }
   }
 
   test("stateful streaming exact dedup: state survives across batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, String)]
     val stream = mem.toDF().toDF("url", "text")
-    val verdicts = graft.streaming.StreamingIndex.exactDedupStream(spark, stream)
+    val verdicts = graft.streaming.StreamingIndex.sigVerdictStream(spark, stream)
+      .where(col("has_exact"))
     val q = verdicts.toDF().writeStream.format("memory").queryName("dedup_stream")
       .outputMode("append").start()
     val textA = (1 to 20).map(i => s"alpha$i beta$i").mkString(" ")
@@ -553,21 +574,22 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming near-dup pairs: in-state verification finds cross-batch pairs") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, String)]
-    val stream = mem.toDF().toDF("url", "text")
-    val pairs = graft.streaming.StreamingIndex.nearDupPairsStream(spark, stream)
-    val q = pairs.toDF().writeStream.format("memory").queryName("neardup_stream")
+    val mem = MemoryStream[DocSig]
+    val pairs = graft.streaming.StreamingIndex.nearDupPairsDistinctFromSignedStream(
+      spark, mem.toDF())
+    val q = pairs.writeStream.format("memory").queryName("neardup_stream")
       .outputMode("append").start()
 
     def fam(tag: String, tweakAt: Int): String =
       (1 to 40).map(w => if (w == tweakAt) "tweaked" else s"$tag${('a' + w % 26).toChar}$w")
         .mkString(" ")
     // batch 1: u1/u2 near-dups, u3 unrelated
-    mem.addData(("u1", fam("x", -1)), ("u2", fam("x", 5)), ("u3", fam("zz", -1)))
+    mem.addData(signed("u1", fam("x", -1)), signed("u2", fam("x", 5)),
+      signed("u3", fam("zz", -1)))
     q.processAllAvailable()
     // batch 2: u4 is another near-dup of the x-family — the pairs
     // (u1,u4) and (u2,u4) must come from batch-1 STATE
-    mem.addData(("u4", fam("x", 30)))
+    mem.addData(signed("u4", fam("x", 30)))
     q.processAllAvailable()
     val got = spark.sql("select a, b, max(score) as s from neardup_stream group by a, b")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -586,19 +608,21 @@ class StreamingSpec extends SparkTestBase {
 
   test("wrapped near-dup sink delivers each pair at most once") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, String)]
-    val stream = mem.toDF().toDF("url", "text")
+    // already-signed rows, as the tail reads them from the head's sink:
+    // w1/w2 are distinct docs with identical signatures
+    val mem = MemoryStream[DocSig]
     // near-identical docs collide in ~all 20 bands → the raw stream emits
     // the same pair many times; the wrapper must collapse to one row
-    val pairs = graft.streaming.StreamingIndex.nearDupPairsDistinct(spark, stream)
+    val pairs = graft.streaming.StreamingIndex.nearDupPairsDistinctFromSignedStream(
+      spark, mem.toDF())
     val q = pairs.writeStream.format("memory").queryName("neardup_once")
       .outputMode("append").start()
     def fam(tweakAt: Int): String =
       (1 to 40).map(w => if (w == tweakAt) "tweaked" else s"on${('a' + w % 26).toChar}$w")
         .mkString(" ")
-    mem.addData(("w1", fam(-1)), ("w2", fam(-1)))
+    mem.addData(signed("w1", fam(-1)), signed("w2", fam(-1)))
     q.processAllAvailable()
-    mem.addData(("w3", fam(5)))
+    mem.addData(signed("w3", fam(5)))
     q.processAllAvailable()
     val rows = spark.sql("select a, b from neardup_once").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -671,14 +695,14 @@ class StreamingSpec extends SparkTestBase {
     val twoText = candidates.get._2.get
 
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, String)]
+    val mem = MemoryStream[DocSig]
     val q = graft.streaming.StreamingIndex
-      .nearDupPairsDistinct(spark, mem.toDF().toDF("url", "text"))
+      .nearDupPairsDistinctFromSignedStream(spark, mem.toDF())
       .writeStream.format("memory").queryName("neardup_minbands")
       .outputMode("append").start()
-    mem.addData(("base", base))
+    mem.addData(kernel.compute("base", base))
     q.processAllAvailable()
-    mem.addData(("oneband", oneText), ("twoband", twoText))
+    mem.addData(kernel.compute("oneband", oneText), kernel.compute("twoband", twoText))
     q.processAllAvailable()
     val got = spark.sql("select a, b from neardup_minbands").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -694,7 +718,8 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, String)]
     val stream = mem.toDF().toDF("url", "text")
-    val bands = graft.streaming.StreamingIndex.bandPostingsStreamDeduped(spark, stream)
+    val bands = graft.streaming.StreamingIndex.bandPostingsFromSignedStream(spark,
+      firstSeenReps(stream))
     val q = bands.writeStream.format("memory").queryName("bands_dedup")
       .outputMode("append").start()
     val burst = (1 to 40).map(i => s"burst$i copy$i").mkString(" ")
@@ -725,8 +750,9 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, String)]
     val stream = mem.toDF().toDF("url", "text")
-    val pairs = graft.streaming.StreamingIndex.nearDupPairsStreamDeduped(spark, stream)
-    val q = pairs.toDF().writeStream.format("memory").queryName("neardup_dedup")
+    val pairs = graft.streaming.StreamingIndex.nearDupPairsDistinctFromSignedStream(spark,
+      firstSeenReps(stream))
+    val q = pairs.writeStream.format("memory").queryName("neardup_dedup")
       .outputMode("append").start()
     def fam(tweakAt: Int): String =
       (1 to 40).map(w => if (w == tweakAt) "tweaked" else s"nd${('a' + w % 26).toChar}$w")
@@ -756,13 +782,16 @@ class StreamingSpec extends SparkTestBase {
   test("near-dup cap crossing is batch-boundary-independent for id-ordered arrivals") {
     def run(batches: Seq[Seq[(String, String)]]): Set[(Long, Long)] = {
       implicit val sqlCtx = spark.sqlContext
-      val mem = MemoryStream[(String, String)]
-      val stream = mem.toDF().toDF("url", "text")
+      // already-signed rows: c1…c4 are distinct docs with identical signatures
+      val mem = MemoryStream[DocSig]
       val name = s"capcross_${batches.length}_${batches.head.length}"
-      val q = graft.streaming.StreamingIndex.nearDupPairsStream(spark, stream, cap = 2)
-        .toDF().writeStream.format("memory").queryName(name)
+      val q = graft.streaming.StreamingIndex
+        .nearDupPairsDistinctFromSignedStream(spark, mem.toDF(), cap = 2)
+        .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
-      batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      batches.foreach { b =>
+        mem.addData(b.map { case (u, t) => signed(u, t) }: _*); q.processAllAvailable()
+      }
       val got = spark.sql(s"select distinct a, b from $name").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       q.stop()

@@ -524,6 +524,15 @@ class DedupJobSpec extends SparkTestBase {
     intercept[IllegalArgumentException] { // stream needs a checkpoint
       graft.DedupJob.parse(Array("--input", "i", "--output", "o", "--stream"))
     }
+    // a stop-band cap below 2 drops every band group: no LSH pair could emit
+    for (cap <- Seq("1", "0", "-5"))
+      intercept[IllegalArgumentException] {
+        graft.DedupJob.parse(Array("--input", "i", "--output", "o", "--max-band-group", cap))
+      }
+    intercept[IllegalArgumentException] { // negative is not "unbounded"
+      graft.DedupJob.parse(Array("--input", "i", "--output", "o", "--checkpoint", "c",
+        "--stream", "--max-files-per-trigger", "-1"))
+    }
   }
 
   test("--jaccard-verify with --incremental is a usage error") {
