@@ -5,7 +5,8 @@ package graft
   * both the bench action (`count()`, what the frozen Bench times) and the
   * noop sink (`write.format("noop")`, guide §1.4 — computes every column so
   * per-operator cost is not hidden by count-pruning), and optionally dumps
-  * `explain("formatted")` per query for the plans/r07 artifacts.
+  * `explain("formatted")` per query for the plans/ artifacts, with AQE's
+  * runtime `Statistics(...)` annotations stripped.
   *
   * Usage: runMain graft.BenchExtra <sfDir> <reps> [--noop] [--plans <dir>]
   *        [query ...]      (no names = the Bench headline set)
@@ -77,9 +78,14 @@ object BenchExtra {
         Thread.sleep(2000) // QueryExecutionListener events are async — drain
         currentName.set("")
         val inner = capture.get(name).toString
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$d/$name.txt"),
-          (inner + "==== final (returned) plan ====\n" + top).getBytes("UTF-8"))
+        // AQE prints each query stage's runtime Statistics(sizeInBytes=…,
+        // rowCount=…), which two runs of the same plan need not share (a
+        // cache stage read mid-fill has no rowCount yet): drop them so
+        // captures of the same code diff clean
+        val text = (inner + "==== final (returned) plan ====\n" + top)
+          .replaceAll(""", Statistics\([^)]*\)""", "")
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$d/$name.txt"),
+          text.getBytes("UTF-8"))
       }
       val times = (1 to reps).map { r =>
         spark.sparkContext.setJobDescription(s"$name rep$r")

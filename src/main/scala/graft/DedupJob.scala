@@ -24,7 +24,6 @@ import graft.kernel.GraftConfig
   *     [--text-only]                 trust the text column (skip extraction)
   *     [--jaccard-verify]            exact k-gram Jaccard after signature verify
   *                                   (not with --incremental: the probe stores no text)
-  *     [--hot-band-prefilter]        two-phase heavy-hitter exclusion
   *     [--max-band-group <n>]        stop-band cap (default 500)
   *
   * Master/executors/shuffle-partitions come from spark-submit / cluster
@@ -94,8 +93,6 @@ object DedupJob {
         case "--text-only" => a = a.copy(fromHtml = false); i += 1
         case "--jaccard-verify" =>
           a = a.copy(opts = a.opts.copy(jaccardVerify = true)); i += 1
-        case "--hot-band-prefilter" =>
-          a = a.copy(opts = a.opts.copy(hotBandPrefilter = true)); i += 1
         case "--max-band-group" =>
           a = a.copy(opts = a.opts.copy(maxBandGroupSize = argv(i + 1).toInt)); i += 2
         case other =>
@@ -109,7 +106,7 @@ object DedupJob {
         "[--max-files-per-trigger N] [--trigger-interval D] " +
         "[--rewrite paragraphs|spans] [--decontaminate <parquet>] " +
         "[--decontam-n N] [--text-only] " +
-        "[--jaccard-verify] [--hot-band-prefilter] [--max-band-group N]")
+        "[--jaccard-verify] [--max-band-group N]")
     require(a.rewrite.forall(Set("paragraphs", "spans")),
       s"--rewrite must be paragraphs or spans, got: ${a.rewrite.orNull}")
     require(a.rewrite.isEmpty || (!a.stream && a.incremental.isEmpty),

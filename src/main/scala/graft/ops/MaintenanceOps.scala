@@ -136,7 +136,7 @@ object MaintenanceOps {
     val clashes = sigs.where(col("url").isInCollection(renames.values.toSet))
       .limit(1).count()
     require(clashes == 0, "rename target url already exists (merge, not rename)")
-    val newIdUdf = udf((u: String) => graft.hash.SimHash.hash64("doc:" + u))
+    val newIdUdf = udf((u: String) => graft.pipeline.DocSig.idOf(u))
     val m = renames.toSeq.toDF("url", "new_url")
     // doc_id rekey map for the derived tables, from the ORIGINAL sigs —
     // rename-sized (≤ |renames|, a driver-side admin map), so it lives as a
@@ -147,8 +147,8 @@ object MaintenanceOps {
       .select(col("doc_id"), newIdUdf(col("new_url")).as("new_doc_id"))
       .as[(Long, Long)].collect()
     val idMap = idMapRows.toSeq.toDF("doc_id", "new_doc_id")
-    // id-collision guard (the birthday event resolveIdCollisions repairs in
-    // the pipeline): a renamed id colliding with a RETAINED doc's id — or
+    // id-collision guard (the birthday event signatureStage re-keys in the
+    // pipeline): a renamed id colliding with a RETAINED doc's id — or
     // with another renamed id — would silently merge two documents through
     // every derived table. Admin operation → fail loudly; pick another name.
     require(idMapRows.map(_._2).distinct.length == idMapRows.length,

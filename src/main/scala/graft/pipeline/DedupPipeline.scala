@@ -12,7 +12,8 @@ import graft.ledger.Ledger
   * reference's match pipeline (/root/reference/mcrit/matchers/MatcherInterface.py:150-236):
   *
   *   extract → shingle → MinHash(64×8-bit segmented) + SimHash64 →
-  *   exact-hash channel (pichash analog, implies-match pruning) →
+  *   S1 key collapse on doc_id (duplicate urls merge, colliding ids
+  *   re-key) → exact-hash channel (pichash analog, implies-match pruning) →
   *   LSH band explode {4:20} → skew-capped candidate generation (one lazy
   *   plan: map-side local cap, one key shuffle, stop-band groups) →
   *   signature verification (positional equality > 50) [+ exact k-gram
@@ -29,6 +30,10 @@ import graft.ledger.Ledger
   * Scale design notes (100 TB / 10^12 docs):
   *  - One typed mapPartitions computes signature+simhash+exact hash per doc;
   *    everything downstream is DataFrame/Catalyst (pruned, codegen'd).
+  *  - doc_id birthday collisions (~27k expected at 10^12 docs) are repaired
+  *    inside the S1 shuffle, which already groups on doc_id, for every
+  *    signature-table caller; `run()`'s audit adds one scan of the cached
+  *    table, no shuffle, and repairs only a second-order collision.
   *  - Exact-dup docs collapse to one representative BEFORE banding
   *    (≅ PICHASH_IMPLIES_MINHASH_MATCH, MinHashConfig.py:35) — verbatim dups
   *    (a large share of web text) never enter the quadratic path.
@@ -59,16 +64,6 @@ final case class PipelineOptions(
     simHashScoreFloor: Double = 30.0,
     jaccardVerify: Boolean = false,
     jaccardThreshold: Double = 0.3,
-    // detect+repair 64-bit doc_id birthday collisions (≈27k expected at the
-    // 10^12-doc design point) — one cheap partial-aggregated count shuffle
-    auditIds: Boolean = true,
-    // opt-in EXACT two-phase heavy-hitter exclusion before the candidate
-    // shuffle: over-cap band keys ship no postings at all. Without it the
-    // always-on map-side local cap still bounds a mega-hot band to cap+1
-    // postings per map partition, and the reducer drops the group — the
-    // output is the same either way. Turn on for corpora known to carry
-    // mega-hot bands.
-    hotBandPrefilter: Boolean = false,
     numPartitions: Int = 0 // 0 = leave to session default
 )
 
@@ -76,7 +71,8 @@ final case class PipelineOptions(
   * is 128-bit (exact_hash, exact_hash2): a single 64-bit content hash at the
   * 10^12-doc design scale expects ~27k birthday collisions = silent false
   * exact merges. doc_id stays a 64-bit join/shuffle key (narrow hot-path
-  * rows); its collisions are repaired by `resolveIdCollisions`.
+  * rows): `DocSig.idOf(url)`, re-keyed to `DocSig.rekeyedId(url, round)`
+  * where it collides (`DedupPipeline.collapseById`, `resolveIdCollisions`).
   */
 final case class DocSig(
     doc_id: Long,
@@ -162,7 +158,7 @@ object DocSig {
       val tok = TextNorm.tokenize(if (text == null) "" else text)
       val n = tok.numTokens
       val hashable = n > c.minTokens
-      val docId = SimHash.hash64("doc:" + url)
+      val docId = idOf(url)
       val hasExact = n >= c.exactHashMinTokens
       val normLen = if (hasExact) normalizedBytes(tok.paraTokens) else 0
       val exactHash = if (hasExact) SimHash.hash64Bytes(normScratch, normLen) else 0L
@@ -182,6 +178,13 @@ object DocSig {
         hasher.pack(sigInts), sh)
     }
   }
+
+  /** The doc_id of `url`: a 64-bit hash, unique up to birthday collisions. */
+  def idOf(url: String): Long = SimHash.hash64("doc:" + url)
+
+  /** The id `url` takes in collision-repair round `round` (≥ 1): a salted
+    * re-hash, so every url of a collided id moves to its own fresh id. */
+  def rekeyedId(url: String, round: Int): Long = SimHash.hash64(s"doc:$round:$url")
 
   /** Deterministic total order on same-url rows for the S1 key-dedup
     * (compare content fields; the winner is the lexicographically largest —
@@ -238,19 +241,37 @@ final class DedupPipeline(
   }
 
   /** One typed pass per doc: tokenize, shingle, sign (MinHash + SimHash),
-    * exact hash, then S1 key-dedup — re-crawled duplicate urls COLLAPSE to
-    * one deterministic row (max over the full row struct; ≅ the reference
-    * inserting by sha256 key, MemoryStorage.py:369). Without the collapse a
-    * duplicate url ships its doc_id twice into every band group, emitting
-    * (x, x) self-pairs and duplicate output rows — `resolveIdCollisions`
-    * deliberately skips same-url ids on the premise this stage removed
-    * them. One narrow-row shuffle (~100 B/doc), only paid by the batch
-    * path (the streaming path dedups in state).
+    * exact hash, then the S1 key collapse (`collapseById`) in one
+    * narrow-row shuffle (~100 B/doc) on doc_id: re-crawled duplicate urls
+    * COLLAPSE to one deterministic row (≅ the reference inserting by sha256
+    * key, MemoryStorage.py:369), and distinct urls sharing a 64-bit doc_id
+    * are re-keyed apart. Without the collapse a duplicate url ships its
+    * doc_id twice into every band group, emitting (x, x) self-pairs and
+    * duplicate output rows. Only the batch path pays the shuffle (the
+    * streaming path dedups in state).
     */
-  def signatureStage(docs: DataFrame): Dataset[DocSig] =
-    signRows(docs).groupByKey(_.url)
-      .reduceGroups((a, b) => if (DocSig.rowOrder(a, b) >= 0) a else b)
-      .map(_._2)
+  def signatureStage(docs: DataFrame): Dataset[DocSig] = collapseById(signRows(docs))
+
+  /** The S1 collapse, grouped on doc_id (one url always maps to one
+    * `DocSig.idOf`, so a doc_id group holds every row of its urls):
+    * same-url rows collapse to their `DocSig.rowOrder` maximum (any fixed
+    * rule works, it just must not depend on partitioning); when more than
+    * one distinct url remains, the id is a birthday collision and each url
+    * takes `DocSig.rekeyedId(url, 1)` — round 1 of `resolveIdCollisions`,
+    * paid inside the shuffle the collapse needs anyway. A re-keyed id that
+    * hits another doc's id (a second-order collision) is left to `run()`'s
+    * audit.
+    */
+  private[graft] def collapseById(rows: Dataset[DocSig]): Dataset[DocSig] =
+    rows.groupByKey(_.doc_id).flatMapGroups { (_, group) =>
+      val byUrl = scala.collection.mutable.HashMap.empty[String, DocSig]
+      for (d <- group) byUrl.get(d.url) match {
+        case Some(kept) if DocSig.rowOrder(kept, d) >= 0 =>
+        case _ => byUrl(d.url) = d
+      }
+      if (byUrl.size == 1) byUrl.valuesIterator
+      else byUrl.valuesIterator.map(d => d.copy(doc_id = DocSig.rekeyedId(d.url, 1)))
+    }
 
   /** The per-doc kernel pass alone: (url, text) → one `DocSig` per input
     * row, no url collapse. Stateless, so it also signs a streaming
@@ -290,38 +311,25 @@ final class DedupPipeline(
     (reps, exactEdges)
   }
 
-  /** Detect and deterministically repair doc_id birthday collisions: ids
-    * claimed by more than one distinct url are re-keyed with a salted
-    * re-hash, iterating until clean (expected 1 round; collision sets are
-    * tiny — ~27k at 10^12 docs — so the fix-up join broadcasts). Duplicate
-    * input urls are NOT collisions: they collapse by design (S1 dedup by
-    * key, ≅ sha256 dedup, MemoryStorage.py:369) and stay untouched.
+  /** Repair loop for doc_id collisions in a url-unique signature table
+    * (S1 output): every id claimed by more than one row is re-keyed with
+    * `DocSig.rekeyedId`, iterating until clean (collision sets are tiny —
+    * ~27k at 10^12 docs — so the fix-up join broadcasts). `collapseById`
+    * already applies round 1 to first-order collisions, so `run()` reaches
+    * this loop only for a second-order one (a re-keyed id hitting another
+    * doc's id). Duplicate urls break the url-unique premise loudly: they
+    * rehash to the SAME id every round, so the loop cannot converge and
+    * throws.
     */
-  def resolveIdCollisions(sigs0: DataFrame, urlUnique: Boolean = false): DataFrame = {
-    val rehash = udf((url: String, round: Int) => SimHash.hash64(s"doc:$round:$url"))
+  def resolveIdCollisions(sigs0: DataFrame): DataFrame = {
+    val rehash = udf((url: String, round: Int) => DocSig.rekeyedId(url, round))
     var cur = sigs0
     var round = 1
     var clean = false
     while (!clean && round <= 5) {
-      // cheap common path: a pure long-key count shuffle (map-side combined);
-      // url disambiguation — duplicate urls collapse by design, only distinct
-      // urls on one id are collisions — runs only over the suspicious ids
-      val suspicious = cur.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      // a pure long-key count shuffle (map-side combined)
+      val collided = cur.groupBy("doc_id").agg(count(lit(1)).as("n"))
         .where(col("n") > 1).select("doc_id")
-      // urlUnique: the caller guarantees one row per url (signatureStage's S1
-      // reduceGroups output — run()'s case). Then ANY doc_id with >1 row is
-      // >1 DISTINCT urls, i.e. a collision, and the disambiguation pass
-      // (broadcast build + join + second aggregate — two more chained stage
-      // barriers per audit) is provably redundant. Misuse is loud, not
-      // silent: duplicate urls rehash to the SAME id every round, so the
-      // loop cannot converge and throws below.
-      val collided =
-        if (urlUnique) suspicious
-        else cur.join(broadcast(suspicious), "doc_id")
-          .groupBy("doc_id")
-          .agg(min("url").as("u_min"), max("url").as("u_max"))
-          .where(col("u_min") =!= col("u_max"))
-          .select("doc_id")
       if (collided.isEmpty) clean = true
       else {
         cur = cur.join(broadcast(collided.withColumn("_hit", lit(true))), Seq("doc_id"), "left")
@@ -421,8 +429,7 @@ final class DedupPipeline(
     * the exact channel.
     */
   def candidateStage(bands: DataFrame, bandMatchesRequired: Int): DataFrame =
-    DedupPipeline.pairsFromBands(spark, bands, opts.maxBandGroupSize, bandMatchesRequired,
-      prefilterHot = opts.hotBandPrefilter)
+    DedupPipeline.pairsFromBands(spark, bands, opts.maxBandGroupSize, bandMatchesRequired)
 
   // ---- verification ---------------------------------------------------
 
@@ -579,71 +586,39 @@ final class DedupPipeline(
     val docs = extractStage(input, fromHtml)
     // cache the FULL signature table: it feeds banding, verification and the
     // final assignment join — without this the typed signature pass (the
-    // dominant CPU cost) would run twice
-    val sigsRaw = stage(ledger, "signatures", s"fromHtml=$fromHtml", Nil) {
+    // dominant CPU cost) would run twice. ids=2: the stored table carries
+    // collapseById's re-keyed ids (a table stored without them would pass
+    // the audit unrepaired).
+    val sigs0 = auditedIds(stage(ledger, "signatures", s"fromHtml=$fromHtml,ids=2", Nil) {
       signatureStage(docs).toDF()
-    }.cache()
-
-    // doc_id collision audit (opts.auditIds). Ledger-less runs OVERLAP the
-    // audit action with the pipeline's own materialization (guide §2.6:
-    // independent jobs back-fill each other): the audit's verdict is clean
-    // for every real corpus (a dirty verdict needs a 64-bit birthday
-    // collision), so the pipeline is built OPTIMISTICALLY on the unaudited
-    // table while the audit runs concurrently — the block-level cache locks
-    // share the signature fill between the two job chains — and only a
-    // dirty verdict (checked after the optimistic build materialized)
-    // discards that work and rebuilds on the repaired ids. Measured: the
-    // serial audit was ~1-1.5 s of the ~10 s bench-corpus run, a full
-    // barrier chain that the overlapped pipeline now hides entirely. Ledgered
-    // runs keep the sequential audit: stage descriptors are
-    // content-independent, so an optimistic "candidates" stage written from
-    // unrepaired ids would be served VERBATIM to the rebuild. The audit
-    // gets its own daemon thread: on a shared pool it would wait for a free
-    // worker, and with every worker busy the await below would never return.
-    val auditFuture: Option[scala.concurrent.Future[Boolean]] =
-      if (opts.auditIds && ledger.isEmpty)
-        Some(DedupPipeline.onOwnThread(spark, "graft-id-audit")(hasIdCollisions(sigsRaw)))
-      else None
-    val sigs0First =
-      if (!opts.auditIds) sigsRaw
-      else if (ledger.isDefined) resolveIdCollisions(sigsRaw, urlUnique = true)
-      else sigsRaw // optimistic; auditFuture decides below
-
-    // producer → CC → assign, from an (audited or optimistically unaudited)
-    // signature table
-    def runFromAudited(sigs0: DataFrame): DataFrame = {
-      val graph = pairGraph(sigs0, ledger, jaccardText(docs))
-      val edges = graph.exactEdges.select("src", "dst")
-        .unionByName(graph.verified.select(col("a").as("src"), col("b").as("dst")))
-      val components = stage(ledger, "components", "", Seq("verified")) {
-        ConnectedComponents.run(edges)
-      }
-      // CC collected or checkpointed its edges: both channels materialized
-      graph.release()
-      // every doc: component if present, else itself
-      sigs0.select("url", "doc_id")
-        .join(components.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-        .withColumn("cluster_id", coalesce(col("component"), col("doc_id")))
-        .select("url", "doc_id", "cluster_id")
+    }.cache())
+    val graph = pairGraph(sigs0, ledger, jaccardText(docs))
+    val edges = graph.exactEdges.select("src", "dst")
+      .unionByName(graph.verified.select(col("a").as("src"), col("b").as("dst")))
+    val components = stage(ledger, "components", "", Seq("verified")) {
+      ConnectedComponents.run(edges)
     }
-
-    val optimistic = runFromAudited(sigs0First)
-    auditFuture match {
-      case None => optimistic
-      case Some(f) =>
-        val collided =
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-        if (!collided) optimistic
-        else runFromAudited(resolveIdCollisions(sigsRaw, urlUnique = true))
-    }
+    // CC collected or checkpointed its edges: both channels materialized
+    graph.release()
+    // every doc: component if present, else itself
+    sigs0.select("url", "doc_id")
+      .join(components.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
+      .withColumn("cluster_id", coalesce(col("component"), col("doc_id")))
+      .select("url", "doc_id", "cluster_id")
   }
 
-  /** Any doc_id claimed by more than one row? On url-unique input (S1
-    * output) this is exactly "collisions exist" — the gate the optimistic
-    * audit overlap in `run()` awaits. */
-  private[graft] def hasIdCollisions(sigs: DataFrame): Boolean =
-    !sigs.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .where(col("n") > 1).isEmpty
+  /** `run()`'s doc_id audit of a url-unique signature table (S1 output).
+    * `collapseById` re-keyed every first-order collision, so a collision
+    * left in the table involves a re-keyed row (doc_id ≠ `DocSig.idOf(url)`).
+    * One full-parallel count of those rows, the action that also fills the
+    * caller's signature cache, decides: none (every real corpus) returns
+    * the table as is; otherwise the `resolveIdCollisions` loop repairs it.
+    */
+  private[graft] def auditedIds(sigs: DataFrame): DataFrame = {
+    val idOf = udf((url: String) => DocSig.idOf(url))
+    if (sigs.where(col("doc_id") =!= idOf(col("url"))).count() == 0) sigs
+    else resolveIdCollisions(sigs)
+  }
 
   /** Verified duplicate pairs only (no clustering): the producer's pairs,
     * Jaccard-verified under `opts.jaccardVerify` exactly as in `run()`. */
@@ -668,16 +643,6 @@ final class DedupPipeline(
   def dupPairsFromSigs(sigs0: DataFrame): DataFrame = pairGraph(sigs0).pairs
 
   // ---- probe-only incremental pairs ------------------------------------
-
-  /** What a probe-style incremental step computes, split out for state
-    * maintenance: `candInput` feeds candidate generation; `exactEdges` are
-    * the exact-channel pairs touching new docs; `newBands` are the NEW
-    * reps' band postings (what a rolling index must append); `replacedReps`
-    * are old rep doc_ids whose groups re-elected a new rep (what a rolling
-    * index must tombstone so the stored band table stays rep-only).
-    */
-  final case class ProbeParts(candInput: DataFrame, exactEdges: DataFrame,
-      newBands: DataFrame, replacedReps: DataFrame)
 
   /** PROBE-ONLY incremental pair production — the scale-correct shape for
     * "a small new batch lands on a 10^12-doc corpus" (≅ the reference's
@@ -725,7 +690,7 @@ final class DedupPipeline(
     * the probe-plan construction (old-side exact-group aggregation, band
     * probe) twice. Runs the producer's tail with the touching-new filter.
     */
-  private[graft] def probeDupPairsFrom(parts: ProbeParts,
+  private[graft] def probeDupPairsFrom(parts: DedupPipeline.ProbeParts,
       oldSigs0: DataFrame, newSigs0: DataFrame): DataFrame = {
     val newIds = newSigs0.select("doc_id")
     val allHashable = oldSigs0.where(col("hashable")).unionByName(newSigs0.where(col("hashable")))
@@ -749,7 +714,7 @@ final class DedupPipeline(
     * tombstone `replacedReps` into its persisted index.
     */
   private[graft] def probeParts(oldSigs0: DataFrame, newSigs0: DataFrame,
-      oldBands: Option[DataFrame]): ProbeParts = {
+      oldBands: Option[DataFrame]): DedupPipeline.ProbeParts = {
     // ---- exact channel, touched groups only ----
     val newExact = newSigs0.where(col("has_exact"))
     val touchedHashes = newExact.select("exact_hash", "exact_hash2").distinct()
@@ -795,7 +760,7 @@ final class DedupPipeline(
       .join(broadcast(replacedOldReps), Seq("doc_id"), "left_anti")
       .select("band_id", "band_hash", "doc_id")
 
-    ProbeParts(
+    DedupPipeline.ProbeParts(
       oldProbe.unionByName(newBands.select("band_id", "band_hash", "doc_id")),
       exactEdges,
       newBands.select("doc_id", "band_id", "band_hash"),
@@ -804,6 +769,16 @@ final class DedupPipeline(
 }
 
 object DedupPipeline {
+  /** What a probe-style incremental step computes, split out for state
+    * maintenance: `candInput` feeds candidate generation; `exactEdges` are
+    * the exact-channel pairs touching new docs; `newBands` are the NEW
+    * reps' band postings (what a rolling index must append); `replacedReps`
+    * are old rep doc_ids whose groups re-elected a new rep (what a rolling
+    * index must tombstone so the stored band table stays rep-only).
+    */
+  final case class ProbeParts(candInput: DataFrame, exactEdges: DataFrame,
+      newBands: DataFrame, replacedReps: DataFrame)
+
   /** Single-long shuffle key for a (band_id, band_hash) posting — xxhash64
     * over both columns, preserving the FULL 64-bit band-hash entropy. The
     * old `band_id << 32 | low32(band_hash)` packing truncated the hash to
@@ -890,42 +865,13 @@ object DedupPipeline {
     * single-long grouping key.
     */
   def pairsFromBands(spark: SparkSession, bands: DataFrame,
-      cap: Int, bandMatchesRequired: Int, prefilterHot: Boolean = false): DataFrame = {
+      cap: Int, bandMatchesRequired: Int): DataFrame = {
     import spark.implicits._
     val keyed = bands
       .select(DedupPipeline.packedBandKey(col("band_id"), col("band_hash")).as("band_key"),
         col("doc_id"))
       .as[(Long, Long)]
-    // two-phase heavy-hitter prefilter: over-cap band keys are detected
-    // map-side (pigeonhole: a key with global count > cap has local count
-    // > cap/numMapTasks in at least one map partition), exactly counted on
-    // that tiny candidate superset, and anti-joined out BEFORE the shuffle —
-    // so a 10^7-member boilerplate band never sends its postings to one
-    // reducer just to be dropped there. Off by default: at bench scale the
-    // extra passes cost more than the skew they remove; turn on when the
-    // corpus has mega-hot bands (the 10^12-doc web path).
-    val input =
-      if (!prefilterHot) keyed
-      else {
-        val nParts = math.max(1, keyed.rdd.getNumPartitions)
-        val localT = math.max(2, cap / nParts)
-        val candidates = keyed.mapPartitions { it =>
-          val counts = new java.util.HashMap[Long, Int]()
-          it.foreach { case (k, _) => counts.merge(k, 1, (a, b) => a + b) }
-          import scala.jdk.CollectionConverters._
-          counts.entrySet().iterator().asScala
-            .filter(_.getValue >= localT).map(_.getKey)
-        }.toDF("band_key").distinct()
-        val hot = keyed.toDF("band_key", "doc_id")
-          .join(broadcast(candidates), "band_key")
-          .groupBy("band_key").agg(count(lit(1)).as("n"))
-          .where(col("n") > cap)
-          .select("band_key")
-        keyed.toDF("band_key", "doc_id")
-          .join(broadcast(hot), Seq("band_key"), "left_anti")
-          .as[(Long, Long)]
-      }
-    cappedKeyPairs(spark, input, cap).groupBy("a", "b").agg(count(lit(1)).as("n_bands"))
+    cappedKeyPairs(spark, keyed, cap).groupBy("a", "b").agg(count(lit(1)).as("n_bands"))
       .where(col("n_bands") >= bandMatchesRequired)
   }
 
@@ -996,10 +942,9 @@ object DedupPipeline {
     * within each channel pairs are already unique (verifyStage's candidates
     * arrive grouped on (a, b); exactGroups emits one edge per member); a
     * test asserts (src, dst) uniqueness on batch and probe output. (A 64-bit
-    * doc_id birthday collision could break the premise; `run()` repairs
-    * those ids before pairing, and the pair surfaces inherit the same
-    * astronomical-rarity trade the rest of the unaudited pair path already
-    * makes.)
+    * doc_id birthday collision could break the premise; `signatureStage`
+    * re-keys those ids before pairing for every caller, and `run()` also
+    * repairs the second-order ones.)
     */
   def unionDisjointChannels(lsh: DataFrame, exactEdges: DataFrame): DataFrame = {
     val l = lsh.select(col("src"), col("dst"), col("score"), col("hamming"),
@@ -1007,22 +952,6 @@ object DedupPipeline {
     val e = exactEdges.select(col("src"), col("dst"),
       lit(100.0).as("score"), lit(0).as("hamming"), lit(FlagExact).as("flags"))
     l.unionByName(e)
-  }
-
-  /** Runs `f` on a daemon thread started for this call. The thread is
-    * created by the caller, so it inherits the caller's Spark local
-    * properties (job group, description, scheduler pool) through Spark's
-    * inheritable thread-locals; the active session is set explicitly. */
-  private[graft] def onOwnThread[T](spark: SparkSession, name: String)(
-      f: => T): scala.concurrent.Future[T] = {
-    val done = scala.concurrent.Promise[T]()
-    val t = new Thread(() => {
-      SparkSession.setActiveSession(spark)
-      try done.success(f) catch { case e: Throwable => done.failure(e) }
-    }, name)
-    t.setDaemon(true)
-    t.start()
-    done.future
   }
 
   /** Drops the blocks behind a `localCheckpoint`ed frame; a no-op for any

@@ -175,7 +175,7 @@ class DedupPipelineSpec extends SparkTestBase {
     assert(withoutChannel == 0, "with the channel off the raised minhash gate must reject it")
   }
 
-  test("non-default config matrix: XorAll strategy + jaccard verify + hot prefilter") {
+  test("non-default config matrix: XorAll strategy + jaccard verify") {
     import spark.implicits._
     val near = (1 to 40).map(i => s"tok${('a' + i % 26).toChar}$i")
     val rows = Seq(
@@ -185,7 +185,7 @@ class DedupPipelineSpec extends SparkTestBase {
       .toDF("url", "text")
     val cfg = graft.kernel.GraftConfig.default.copy(
       strategy = graft.kernel.MinHashStrategy.XorAll)
-    val opts = PipelineOptions(jaccardVerify = true, hotBandPrefilter = true)
+    val opts = PipelineOptions(jaccardVerify = true)
     val out = new DedupPipeline(spark, cfg, opts).run(rows, fromHtml = false)
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(out("u1") == out("u2"), "near-dups must cluster under XorAll+jaccard")
@@ -211,7 +211,7 @@ class DedupPipelineSpec extends SparkTestBase {
     assert(sigs.distinct.size == 3, "strategies must be distinct hash families")
   }
 
-  test("hot-band prefilter: identical pairs, hot keys dropped before the shuffle") {
+  test("a 600-member band key over cap 500 pairs none of its members") {
     import spark.implicits._
     // one mega-hot band key (600 members > cap 500) + small cold groups
     val hot = (0 until 600).map(i => (0, 777L, i.toLong))
@@ -220,10 +220,6 @@ class DedupPipelineSpec extends SparkTestBase {
     val bands = (hot ++ cold).toDF("band_id", "band_hash", "doc_id")
     val base = DedupPipeline.pairsFromBands(spark, bands, cap = 500, bandMatchesRequired = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val pre = DedupPipeline.pairsFromBands(spark, bands, cap = 500, bandMatchesRequired = 1,
-      prefilterHot = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    assert(base == pre, "prefilter must not change the candidate set")
     assert(base.nonEmpty && !base.exists { case (a, b, _) => a >= 100 || b >= 100 },
       "hot-group members must not pair")
   }
@@ -403,49 +399,63 @@ class DedupPipelineSpec extends SparkTestBase {
 
   test("doc_id collision audit re-keys colliding urls deterministically") {
     import spark.implicits._
-    // synthesize a signature table with a manufactured 64-bit id collision
+    import graft.pipeline.DocSig
+    // a signature table with a manufactured 64-bit id collision, fed to
+    // the S1 collapse step signatureStage runs
+    def sig(id: Long, url: String) = DocSig(id, url, n_tokens = 1, hashable = false,
+      exact_hash = 0L, exact_hash2 = 0L, has_exact = false, sig = Array.emptyByteArray,
+      simhash = 0L)
     val sigs = Seq(
-      (42L, "url-a"), (42L, "url-b"),        // collision: same id, distinct urls
-      (7L, "url-c"), (9L, "url-d"), (9L, "url-d")) // duplicate url: NOT a collision
-      .toDF("doc_id", "url")
+      sig(42L, "url-a"), sig(42L, "url-b"),        // collision: same id, distinct urls
+      sig(7L, "url-c"), sig(9L, "url-d"), sig(9L, "url-d")) // duplicate url: NOT a collision
+      .toDS()
     val pipe = new DedupPipeline(spark)
-    val fixed = pipe.resolveIdCollisions(sigs).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
+    val fixed = pipe.collapseById(sigs).collect().map(d => (d.doc_id, d.url))
     val byUrl = fixed.groupBy(_._2).view.mapValues(_.map(_._1).distinct).toMap
     assert(byUrl("url-a").head != byUrl("url-b").head, "collision must be repaired")
     assert(byUrl("url-c").toSeq == Seq(7L), "clean ids stay untouched")
     assert(byUrl("url-d").toSeq == Seq(9L), "duplicate urls are not collisions")
     // deterministic: second run yields identical ids
-    val again = pipe.resolveIdCollisions(sigs).collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._2)
+    val again = pipe.collapseById(sigs).collect().map(d => (d.doc_id, d.url)).sortBy(_._2)
     assert(again.toSeq == fixed.sortBy(_._2).toSeq)
+    // the re-keyed ids are resolveIdCollisions' round-1 ids
+    for (u <- Seq("url-a", "url-b"))
+      assert(byUrl(u).toSeq == Seq(graft.hash.SimHash.hash64(s"doc:1:$u")))
+    assert(fixed.length == 4, "the duplicate url collapses to one row")
   }
 
-  test("url-unique audit paths: one-phase check and the optimistic gate") {
+  test("url-unique audit paths: one-phase repair and the re-keyed-row gate") {
     import spark.implicits._
+    import graft.pipeline.DocSig
     val pipe = new DedupPipeline(spark)
-    // hasIdCollisions — the gate run()'s overlapped audit awaits
-    val clean = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "url")
-    assert(!pipe.hasIdCollisions(clean))
+    // one-phase repair on url-unique input
     val dirty = Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("doc_id", "url")
-    assert(pipe.hasIdCollisions(dirty))
-    // urlUnique=true on url-unique input: same repair as the two-phase form
-    val fixed = pipe.resolveIdCollisions(dirty, urlUnique = true).collect()
+    val fixed = pipe.resolveIdCollisions(dirty).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val byUrl = fixed.groupBy(_._2).view.mapValues(_.map(_._1).distinct).toMap
     assert(byUrl("a").head != byUrl("b").head, "collision must be repaired")
     assert(byUrl("c").toSeq == Seq(2L), "clean ids stay untouched")
-    // misuse (duplicate urls under urlUnique=true) fails LOUDLY: identical
-    // urls rehash identically every round, so the loop cannot converge
+    // duplicate urls break the premise LOUDLY: identical urls rehash
+    // identically every round, so the loop cannot converge
     val dupUrls = Seq((9L, "d"), (9L, "d")).toDF("doc_id", "url")
     intercept[IllegalStateException] {
-      pipe.resolveIdCollisions(dupUrls, urlUnique = true).collect()
+      pipe.resolveIdCollisions(dupUrls).collect()
     }
+    // the gate: a table with no re-keyed row passes through as is, no repair
+    val clean = Seq("a", "b").map(u => (DocSig.idOf(u), u)).toDF("doc_id", "url")
+    assert(pipe.auditedIds(clean) eq clean)
+    // a second-order collision: url "b" was re-keyed onto the id "c" holds;
+    // the gate sees the re-keyed row and the repair loop separates them
+    val hit = DocSig.idOf("c")
+    val second = Seq((DocSig.idOf("a"), "a"), (hit, "b"), (hit, "c"))
+      .toDF("doc_id", "url")
+    val audited = pipe.auditedIds(second).collect().map(r => (r.getString(1), r.getLong(0))).toMap
+    assert(audited.size == 3 && audited.values.toSet.size == 3, s"ids not unique: $audited")
+    assert(audited("a") == DocSig.idOf("a"), "clean rows stay untouched")
   }
 
   test("run() finishes while every global-pool worker is blocked") {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
+    import scala.concurrent.{ExecutionContext, Future}
     val rows = spark.createDataFrame(Seq(
       ("u1", (1 to 40).map(i => s"alpha$i").mkString(" ")),
       ("u2", (1 to 40).map(i => s"alpha$i").mkString(" ")),
@@ -468,15 +478,6 @@ class DedupPipelineSpec extends SparkTestBase {
       val out = runner.get(120, java.util.concurrent.TimeUnit.SECONDS)
       assert(out("u1") == out("u2") && out("u3") != out("u1"))
     } finally release.countDown()
-    // the audit thread carries the caller's job group and active session
-    spark.sparkContext.setJobGroup("audit-group", "audit")
-    try {
-      val seen = Await.result(DedupPipeline.onOwnThread(spark, "probe-thread") {
-        (spark.sparkContext.getLocalProperty("spark.jobGroup.id"),
-          org.apache.spark.sql.SparkSession.getActiveSession)
-      }, 30.seconds)
-      assert(seen == (("audit-group", Some(spark))))
-    } finally spark.sparkContext.clearJobGroup()
   }
 }
 
@@ -514,6 +515,10 @@ class DedupJobSpec extends SparkTestBase {
       parsed.opts.maxBandGroupSize == 99)
     intercept[IllegalArgumentException] { graft.DedupJob.parse(Array("--input", "x")) }
     intercept[IllegalArgumentException] { graft.DedupJob.parse(Array("--bogus")) }
+    val gone = intercept[IllegalArgumentException] {
+      graft.DedupJob.parse(Array("--input", "i", "--output", "o", "--hot-band-prefilter"))
+    }
+    assert(gone.getMessage.contains("unknown argument: --hot-band-prefilter"))
     intercept[IllegalArgumentException] { // incremental without checkpoint
       graft.DedupJob.parse(Array("--input", "i", "--output", "o", "--incremental", "b"))
     }

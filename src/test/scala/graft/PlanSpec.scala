@@ -216,7 +216,7 @@ class PlanSpec extends SparkTestBase {
     // an Aggregate over the old signature table with no Join beneath it is a
     // corpus-wide re-aggregation — the persisted-index probe must restrict
     // the old side to batch-touched groups (a semi join) BEFORE any groupBy.
-    // Asserted on each ProbeParts member and on the full probe plan: the
+    // Asserted on each DedupPipeline.ProbeParts member and on the full probe plan: the
     // candidate stage is lazy, so the final plan shows every subtree.
     def corpusWideAggs(df: org.apache.spark.sql.DataFrame): Seq[Aggregate] =
       df.queryExecution.optimizedPlan.collect {
