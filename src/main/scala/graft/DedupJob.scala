@@ -13,6 +13,7 @@ import graft.kernel.GraftConfig
   *     --output <parquet dir for (url, doc_id, cluster_id)> \
   *     [--checkpoint <ledger dir>]   resumable stage checkpoints + lineage
   *     [--incremental <parquet>]     ROLLING incremental batch (see below)
+  *     [--compact-every N]           incremental: fold deltas after N (default 16)
   *     [--stream]                    Structured-Streaming ingest (see runStream)
   *     [--trigger-once]              stream mode: drain available input, stop
   *     [--state-store rocksdb|hdfs]  stream state backend (default rocksdb)
@@ -36,7 +37,7 @@ import graft.kernel.GraftConfig
   * --checkpoint): the --input corpus is signed/banded AT MOST ONCE into
   * the ledger (`MaintenanceOps.buildOrLoadDedupIndex`; later runs never
   * touch --input), the batch is probe-matched against the stored index
-  * (`DedupPipeline.probeDupPairs` — candidate work ∝ batch, never corpus),
+  * (`DedupPipeline.probeParts` — candidate work ∝ batch, never corpus),
   * the output is the merged-channel dup pairs touching the batch, and the
   * index state ROLLS FORWARD: new signatures and new reps' band postings
   * land in per-batch dirs under `<checkpoint>/inc_sigs` / `inc_bands`,
@@ -73,28 +74,37 @@ object DedupJob {
   private[graft] def parse(argv: Array[String]): Args = {
     var a = Args()
     var i = 0
+    // the value after flag argv(i); a missing or non-integer one names the flag
+    def value(): String = {
+      if (i + 1 >= argv.length)
+        throw new IllegalArgumentException(s"${argv(i)} needs a value")
+      argv(i + 1)
+    }
+    def intValue(): Int = {
+      val v = value()
+      v.toIntOption.getOrElse(
+        throw new IllegalArgumentException(s"${argv(i)} needs an integer, got: $v"))
+    }
     while (i < argv.length) {
       argv(i) match {
-        case "--input" => a = a.copy(input = argv(i + 1)); i += 2
-        case "--output" => a = a.copy(output = argv(i + 1)); i += 2
-        case "--checkpoint" => a = a.copy(checkpoint = Some(argv(i + 1))); i += 2
-        case "--incremental" => a = a.copy(incremental = Some(argv(i + 1))); i += 2
-        case "--compact-every" => a = a.copy(compactEvery = argv(i + 1).toInt); i += 2
+        case "--input" => a = a.copy(input = value()); i += 2
+        case "--output" => a = a.copy(output = value()); i += 2
+        case "--checkpoint" => a = a.copy(checkpoint = Some(value())); i += 2
+        case "--incremental" => a = a.copy(incremental = Some(value())); i += 2
+        case "--compact-every" => a = a.copy(compactEvery = intValue()); i += 2
         case "--stream" => a = a.copy(stream = true); i += 1
         case "--trigger-once" => a = a.copy(triggerOnce = true); i += 1
-        case "--state-store" => a = a.copy(stateStore = argv(i + 1)); i += 2
-        case "--max-files-per-trigger" =>
-          a = a.copy(maxFilesPerTrigger = argv(i + 1).toInt); i += 2
-        case "--trigger-interval" =>
-          a = a.copy(triggerInterval = argv(i + 1)); i += 2
-        case "--rewrite" => a = a.copy(rewrite = Some(argv(i + 1))); i += 2
-        case "--decontaminate" => a = a.copy(decontaminate = Some(argv(i + 1))); i += 2
-        case "--decontam-n" => a = a.copy(decontamN = argv(i + 1).toInt); i += 2
+        case "--state-store" => a = a.copy(stateStore = value()); i += 2
+        case "--max-files-per-trigger" => a = a.copy(maxFilesPerTrigger = intValue()); i += 2
+        case "--trigger-interval" => a = a.copy(triggerInterval = value()); i += 2
+        case "--rewrite" => a = a.copy(rewrite = Some(value())); i += 2
+        case "--decontaminate" => a = a.copy(decontaminate = Some(value())); i += 2
+        case "--decontam-n" => a = a.copy(decontamN = intValue()); i += 2
         case "--text-only" => a = a.copy(fromHtml = false); i += 1
         case "--jaccard-verify" =>
           a = a.copy(opts = a.opts.copy(jaccardVerify = true)); i += 1
         case "--max-band-group" =>
-          a = a.copy(opts = a.opts.copy(maxBandGroupSize = argv(i + 1).toInt)); i += 2
+          a = a.copy(opts = a.opts.copy(maxBandGroupSize = intValue())); i += 2
         case other =>
           throw new IllegalArgumentException(s"unknown argument: $other")
       }
@@ -259,21 +269,6 @@ object DedupJob {
     (written.count(), written.select("cluster_id").distinct().count())
   }
 
-  /** One rolling incremental step; returns (pair rows written, fresh docs
-    * signed). See the object doc.
-    *
-    * CRASH CONSISTENCY: the three state deltas (band postings, rep
-    * tombstones, signatures) land in per-batch subdirectories
-    * (`inc_<table>/batch=<id>`) and become visible only when the batch's commit
-    * marker (`inc_commits/<id>`) is written LAST — readers union only
-    * COMMITTED batch dirs, so a crash between delta writes leaves orphan
-    * directories that the next run ignores and overwrites. The batch id is
-    * derived from the batch parquet's path + file listing, so a retry of
-    * the same batch lands in the same dirs (idempotent), an
-    * already-committed batch skips its state writes entirely (its urls are
-    * swept by the M7 anti-join anyway), and the same path with NEW content
-    * gets a fresh id.
-    */
   private[graft] val sigColNames = Seq("doc_id", "url", "n_tokens", "hashable",
     "exact_hash", "exact_hash2", "has_exact", "sig", "simhash")
   private[graft] val bandColNames = Seq("doc_id", "band_id", "band_hash")
@@ -291,6 +286,21 @@ object DedupJob {
       s"cfg=${cfg.configHash},sh=${opts.simHashChannel}," +
       s"shmax=${opts.simHashMaxHamming},sigv=2,bandsv=2"
 
+  /** One rolling incremental step; returns (pair rows written, fresh docs
+    * signed). See the object doc.
+    *
+    * CRASH CONSISTENCY: the three state deltas (band postings, rep
+    * tombstones, signatures) land in per-batch subdirectories
+    * (`inc_<table>/batch=<id>`) and become visible only when the batch's commit
+    * marker (`inc_commits/<id>`) is written LAST — readers union only
+    * COMMITTED batch dirs, so a crash between delta writes leaves orphan
+    * directories that the next run ignores and overwrites. The batch id is
+    * derived from the batch parquet's path + file listing, so a retry of
+    * the same batch lands in the same dirs (idempotent), an
+    * already-committed batch skips its state writes entirely (its urls are
+    * swept by the M7 anti-join anyway), and the same path with NEW content
+    * gets a fresh id.
+    */
   def runIncremental(spark: SparkSession, a: Args,
       cfg: GraftConfig = GraftConfig.default): (Long, Long) = {
     import org.apache.spark.sql.functions.col
@@ -358,20 +368,11 @@ object DedupJob {
     // compaction keeps this list short (≤ compactEvery) regardless of how
     // many batches the state has absorbed over its lifetime
     val unfolded = committed.filterNot(foldedIds)
-
-    val sigCols = sigColNames.map(col)
-    val bandCols = bandColNames.map(col)
     // state read = union of COMMITTED, UNFOLDED per-batch delta dirs only
     // (orphans from a crashed run are invisible; folded dirs are already in
     // the base generation)
-    def readDeltas(sub: String, like: org.apache.spark.sql.DataFrame) =
-      readDeltaDirs(spark, fs, chk, sv, sub, unfolded, like)
-    val oldSigs = baseSigs.select(sigCols: _*)
-      .unionByName(readDeltas("inc_sigs", baseSigs).select(sigCols: _*))
-    val replaced = readDeltas("inc_replaced", baseSigs.select("doc_id"))
-    val oldBands = baseBands.select(bandCols: _*)
-      .unionByName(readDeltas("inc_bands", baseBands.select(bandCols: _*)))
-      .join(replaced.select("doc_id"), Seq("doc_id"), "left_anti")
+    val (oldSigs, oldBands) =
+      rollingState(spark, fs, chk, sv, baseSigs, baseBands, unfolded)
 
     // M7 sweep: re-sent urls are already indexed — only genuinely new rows sign
     val batch = pipe.extractStage(spark.read.parquet(a.incremental.get), a.fromHtml)
@@ -382,18 +383,17 @@ object DedupJob {
     // visible), so recomputation is identical
     val freshCount = newSigs.count()
     // ONE probe plan serves both the pair output and the state deltas
-    val parts = pipe.probeParts(oldSigs, newSigs, Some(oldBands))
-    val pairs = pipe.probeDupPairsFrom(parts, oldSigs, newSigs)
-    pairs.write.mode("overwrite").parquet(a.output)
+    val parts = pipe.probeParts(oldSigs, newSigs, oldBands)
+    parts.pairs.write.mode("overwrite").parquet(a.output)
     val pairCount = spark.read.parquet(a.output).count()
     val newlyCommitted = !committed.contains(batchId)
     if (newlyCommitted) {
       val store = graft.storage.TableStore.parquet
-      store.write(parts.newBands.select(bandCols: _*),
+      store.write(parts.newBands.select(bandColNames.map(col): _*),
         s"$chk/inc_bands/$sv/batch=$batchId")
       store.write(parts.replacedReps.select("doc_id"),
         s"$chk/inc_replaced/$sv/batch=$batchId")
-      store.write(newSigs.select(sigCols: _*),
+      store.write(newSigs.select(sigColNames.map(col): _*),
         s"$chk/inc_sigs/$sv/batch=$batchId")
       // commit LAST: the deltas become visible atomically with this marker
       fs.mkdirs(commitsPath)
@@ -443,6 +443,27 @@ object DedupJob {
     if (dirs.isEmpty) like.limit(0) else spark.read.parquet(dirs: _*)
   }
 
+  /** The rolling index state over a base and the committed delta batches
+    * `ids`: (base ∪ delta signatures, (base ∪ delta band postings) minus
+    * the delta tombstones). The probe reads it; compaction persists it. */
+  private def rollingState(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      chk: String, sv: String, baseSigs: org.apache.spark.sql.DataFrame,
+      baseBands: org.apache.spark.sql.DataFrame, ids: Seq[String])
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions.col
+    val sigCols = sigColNames.map(col)
+    val bandCols = bandColNames.map(col)
+    def readDeltas(sub: String, like: org.apache.spark.sql.DataFrame) =
+      readDeltaDirs(spark, fs, chk, sv, sub, ids, like)
+    val sigs = baseSigs.select(sigCols: _*)
+      .unionByName(readDeltas("inc_sigs", baseSigs).select(sigCols: _*))
+    val replaced = readDeltas("inc_replaced", baseSigs.select("doc_id"))
+    val bands = baseBands.select(bandCols: _*)
+      .unionByName(readDeltas("inc_bands", baseBands.select(bandCols: _*)))
+      .join(replaced.select("doc_id"), Seq("doc_id"), "left_anti")
+    (sigs, bands)
+  }
+
   /** Fold the given committed deltas into a new base generation:
     * sigs = base ∪ delta sigs; bands = (base ∪ delta bands) minus delta
     * tombstones, re-co-located on the band key (the probe layout). Crash
@@ -457,27 +478,16 @@ object DedupJob {
       baseBands: org.apache.spark.sql.DataFrame,
       curGen: Int, alreadyFolded: Set[String], foldIds: Seq[String],
       stamp: String): Unit = {
-    import org.apache.spark.sql.functions.col
     val sv = s"v${DedupJob.IncStateVersion}"
     val fs = new org.apache.hadoop.fs.Path(chk)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sigCols = sigColNames.map(col)
-    val bandCols = bandColNames.map(col)
     val g2 = curGen + 1
-    val sigs2 = baseSigs.select(sigCols: _*)
-      .unionByName(readDeltaDirs(spark, fs, chk, sv, "inc_sigs", foldIds, baseSigs)
-        .select(sigCols: _*))
-    val replaced = readDeltaDirs(spark, fs, chk, sv, "inc_replaced", foldIds,
-      baseSigs.select("doc_id"))
-    val bands2 = baseBands.select(bandCols: _*)
-      .unionByName(readDeltaDirs(spark, fs, chk, sv, "inc_bands", foldIds,
-        baseBands.select(bandCols: _*)))
-      .join(replaced.select("doc_id"), Seq("doc_id"), "left_anti")
-    val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val (sigs2, bands2) = rollingState(spark, fs, chk, sv, baseSigs, baseBands, foldIds)
     val store = graft.storage.TableStore.parquet
     store.write(sigs2, s"$chk/inc_base/$sv/gen=$g2/sigs")
-    // the folded band table lands in the probe layout (TableStore.bandLayout)
-    store.writeBanded(bands2, s"$chk/inc_base/$sv/gen=$g2/bands", n)
+    // the folded band table lands in the probe layout
+    store.write(graft.storage.TableStore.bandLayout(bands2),
+      s"$chk/inc_base/$sv/gen=$g2/bands")
     val stampOut = fs.create(new org.apache.hadoop.fs.Path(
       s"$chk/inc_base/$sv/gen=$g2/stamp"), true)
     try stampOut.write(stamp.getBytes("UTF-8")) finally stampOut.close()

@@ -42,9 +42,10 @@ object ConnectedComponents {
   def effectiveDriverThreshold(cap: Long = DriverEdgeThreshold): Long =
     math.min(cap, Runtime.getRuntime.maxMemory() / 4 / 512)
 
-  /** Diagnostic only (read by tools/CCProfile after a `run`): star-loop
-    * iterations of the last distributed run in this JVM, 0 when the last
-    * run took the driver union-find path. Not part of the API contract.
+  /** Diagnostic only (read after a `run` by tools/CCProfile and by the
+    * benchmark's `cluster.cc.iterations` layer): star-loop iterations of the
+    * last distributed run in this JVM, 0 when the last run took the driver
+    * union-find path. Not part of the API contract.
     */
   @volatile var lastRunIterations: Int = -1
 

@@ -16,39 +16,14 @@ object MaintenanceOps {
   def newDocs(input: DataFrame, signatures: DataFrame, keyCol: String = "url"): DataFrame =
     input.join(signatures.select(keyCol), Seq(keyCol), "left_anti")
 
-  /** Incremental dedup (M7 generalized to pair production, ≅ the
-    * reference's addBinarySample → matchSample flow,
-    * /root/reference/mcrit/storage/MongoDbStorage.py:897-930): signs ONLY
-    * `newDocs` (url, text) — the signature kernel is the pipeline's
-    * dominant CPU cost — and PROBES the old corpus instead of re-running
-    * it: candidates are generated exclusively from band keys containing ≥1
-    * new doc (see `DedupPipeline.probeDupPairs`), so candidate-shuffle
-    * volume scales with the batch, not the corpus. Pair semantics are
-    * EXACTLY the full-batch `dupPairsFromSigs` on the unioned corpus
-    * restricted to pairs touching a new doc (same caps, same channels —
-    * asserted by test), so repeated incremental batches converge to the
-    * batch answer. Pass `oldBands` (the persisted band table from `run()`'s
-    * ledger stage or `buildOrLoadDedupIndex`) to skip even the linear
-    * re-banding of the old signature table.
-    */
-  def incrementalDupPairs(spark: SparkSession, oldSigs: DataFrame, newDocs: DataFrame,
-      cfg: graft.kernel.GraftConfig = graft.kernel.GraftConfig.default,
-      opts: graft.pipeline.PipelineOptions = graft.pipeline.PipelineOptions(),
-      oldBands: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) = {
-    val pipe = new graft.pipeline.DedupPipeline(spark, cfg, opts)
-    val newSigs = pipe.signatureStage(pipe.extractStage(newDocs, fromHtml = false))
-      .toDF().cache()
-    (newSigs, pipe.probeDupPairs(oldSigs, newSigs, oldBands))
-  }
-
   /** Build — or resume from the checkpoint ledger — the persisted
     * signature + rep-only band index a probe-style incremental run needs
-    * for its old side: the FULL DocSig table (incl. non-hashable rows — the
-    * exact channel needs them) and the rep-banded band table including the
-    * simhash chunk tables when that channel is on. Descriptors fold in the
-    * kernel fingerprint, so a kernel change rebuilds instead of silently
-    * serving stale postings.
+    * for its old side (`DedupPipeline.probeParts`): the FULL DocSig table
+    * (incl. non-hashable rows — the exact channel needs them) and the
+    * `rebuildBandIndex` table over it. Descriptors fold in the kernel
+    * fingerprint, so a kernel change rebuilds instead of silently serving
+    * stale postings. `docs` is by-name: a committed index never evaluates
+    * it (asserted by the poisoned-corpus test).
     */
   def buildOrLoadDedupIndex(spark: SparkSession, docs: => DataFrame,
       ledger: graft.ledger.Ledger, corpusTag: String,
@@ -71,27 +46,9 @@ object MaintenanceOps {
     }
     val bands = ledger.stage("dedup_bands",
         ledger.descriptor("dedup_bands", bandParams, Seq(sigDesc))) {
-      // co-locate by band key: the persisted probe layout
-      // (TableStore.bandLayout — THE band-table layout contract)
-      val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      graft.storage.TableStore.bandLayout(pipe.repBandTable(sigs), n)
+      rebuildBandIndex(spark, sigs, cfg, opts)
     }
     (sigs, bands)
-  }
-
-  /** Probe-style incremental dedup against a LEDGER-PERSISTED index: the
-    * old side is a co-located read of the materialized signature/band
-    * parquet — `oldDocs` is only evaluated if the index was never built
-    * (by-name; an up-to-date ledger never touches it, asserted by the
-    * poisoned-corpus test).
-    */
-  def incrementalDupPairsFromIndex(spark: SparkSession, oldDocs: => DataFrame,
-      newDocs: DataFrame, ledger: graft.ledger.Ledger, corpusTag: String,
-      cfg: graft.kernel.GraftConfig = graft.kernel.GraftConfig.default,
-      opts: graft.pipeline.PipelineOptions = graft.pipeline.PipelineOptions())
-      : (DataFrame, DataFrame) = {
-    val (oldSigs, oldBands) = buildOrLoadDedupIndex(spark, oldDocs, ledger, corpusTag, cfg, opts)
-    incrementalDupPairs(spark, oldSigs, newDocs, cfg, opts, Some(oldBands))
   }
 
   /** The re-election paths re-band via `repBandTable` under the CALLER's
@@ -129,8 +86,8 @@ object MaintenanceOps {
   def renameDocs(spark: SparkSession, sigs: DataFrame, bands: DataFrame,
       renames: Map[String, String],
       cfg: graft.kernel.GraftConfig = graft.kernel.GraftConfig.default,
-      opts: graft.pipeline.PipelineOptions = graft.pipeline.PipelineOptions(),
-      repOnlyBands: Boolean = true): (DataFrame, DataFrame) = {
+      opts: graft.pipeline.PipelineOptions = graft.pipeline.PipelineOptions())
+      : (DataFrame, DataFrame) = {
     import spark.implicits._
     require(renames.values.toSet.size == renames.size, "rename targets must be distinct")
     val clashes = sigs.where(col("url").isInCollection(renames.values.toSet))
@@ -167,11 +124,10 @@ object MaintenanceOps {
     val bands2 = bands.join(broadcast(idMap), Seq("doc_id"), "left")
       .withColumn("doc_id", coalesce(col("new_doc_id"), col("doc_id")))
       .drop("new_doc_id")
-    if (!repOnlyBands) return (sigs2, bands2)
     requireChannelConsistency(bands, opts)
 
-    // REP RE-ELECTION for the rep-only band table (the flavor `run()` /
-    // `buildOrLoadDedupIndex` persist): the banded representative of an
+    // REP RE-ELECTION for the rep-only band table (every band table the
+    // engine persists is rep-only): the banded representative of an
     // exact group is its MIN doc_id, and re-keying a member can change the
     // minimum — a pure posting re-key would leave the WRONG member banded
     // and break the probe-vs-fresh-run equivalence. For every exact group
@@ -210,18 +166,17 @@ object MaintenanceOps {
   }
 
   /** L5/J6 analog — delete docs: cascade the removal through the signature
-    * and band tables (with Iceberg this is `DELETE FROM ... WHERE`; on
-    * parquet stand-ins it is a filtering rewrite).
+    * and rep-only band tables (with Iceberg this is `DELETE FROM ... WHERE`;
+    * on parquet stand-ins it is a filtering rewrite).
     */
   def deleteDocs(signatures: DataFrame, bands: DataFrame, docIds: Seq[Long],
       cfg: graft.kernel.GraftConfig = graft.kernel.GraftConfig.default,
-      opts: graft.pipeline.PipelineOptions = graft.pipeline.PipelineOptions(),
-      repOnlyBands: Boolean = true): (DataFrame, DataFrame) = {
+      opts: graft.pipeline.PipelineOptions = graft.pipeline.PipelineOptions())
+      : (DataFrame, DataFrame) = {
     val spark = signatures.sparkSession
     val condemned = docIds.toSet
     val sigs2 = signatures.where(!col("doc_id").isInCollection(condemned))
     val bands2 = bands.where(!col("doc_id").isInCollection(condemned))
-    if (!repOnlyBands) return (sigs2, bands2)
     requireChannelConsistency(bands, opts)
     // REP RE-ELECTION (same invariant as renameDocs): deleting an exact
     // group's banded representative must hand its postings to the new
@@ -250,22 +205,19 @@ object MaintenanceOps {
     * (≅ rebuildMinhashBandIndex, MemoryStorage.py:853-878, which drops all
     * band collections and re-adds in packs): one explode over the persisted
     * signature table, co-located on the band key for the probe layout
-    * (the Iceberg `band_id, bucket(band_hash)` partitioning analog). Used
-    * after a band-config change; the Ledger descriptor then differs, so
-    * stale candidate/verify checkpoints invalidate automatically.
+    * (`TableStore.bandLayout`). THE definition of the persisted probe-flavor
+    * table: `buildOrLoadDedupIndex` persists it. Used after a band-config
+    * change; the Ledger descriptor then differs, so stale candidate/verify
+    * checkpoints invalidate automatically.
     */
   def rebuildBandIndex(spark: SparkSession, signatures: DataFrame,
       cfg: graft.kernel.GraftConfig = graft.kernel.GraftConfig.default,
-      opts: graft.pipeline.PipelineOptions = graft.pipeline.PipelineOptions(),
-      numPartitions: Int = 0): DataFrame = {
+      opts: graft.pipeline.PipelineOptions = graft.pipeline.PipelineOptions()): DataFrame = {
     val pipe = new graft.pipeline.DedupPipeline(spark, cfg, opts)
     // THE probe flavor (rep-only + simhash chunk tables when on): feeding a
-    // minhash-only all-docs table to probeDupPairs would silently miss the
+    // minhash-only all-docs table to probeParts would silently miss the
     // simhash channel and inflate group sizes past the stop-band cap
-    val bands = pipe.repBandTable(signatures)
-    val n = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    graft.storage.TableStore.bandLayout(bands, n)
+    graft.storage.TableStore.bandLayout(pipe.repBandTable(signatures))
   }
 
   /** THE paragraph identity: non-empty paragraphs of each doc with their
@@ -292,7 +244,8 @@ object MaintenanceOps {
   /** G1/G2 analog — pair diff: which paragraphs two docs share (exact,
     * position-independent), plus G3's fuzzy fallback — best Levenshtein
     * match among unshared paragraphs (built-in levenshtein, bounded by the
-    * pair's paragraph counts).
+    * pair's paragraph counts). Lazy and uncached: both sides re-read the
+    * two-doc filter, which is cheaper than a cache nothing could release.
     */
   def pairDiff(spark: SparkSession, docs: DataFrame, idA: Long, idB: Long,
       maxDistance: Int = 10): DataFrame = {
@@ -301,7 +254,6 @@ object MaintenanceOps {
         posexplode(split(col("text"), "\n{2,}")).as(Seq("para_idx", "para")))
       .withColumn("norm", regexp_replace(lower(trim(col("para"))), "\\s+", " "))
       .where(length(col("norm")) > 0)
-      .cache()
     val a = paras.where(col("doc_id") === idA)
       .select(col("para_idx").as("idx_a"), col("norm").as("norm_a"))
     val b = paras.where(col("doc_id") === idB)

@@ -25,28 +25,6 @@ object QueryMatch {
     QuerySig(d.sig, bands, d.simhash, d.exact_hash, d.n_tokens)
   }
 
-  /** Top-k corpus matches for a query text, signing the corpus in-flight.
-    * Convenience form for ad-hoc corpora: at any real scale use
-    * `topMatchesFromIndex` against the PERSISTED signature/band tables —
-    * re-signing 100 TB of corpus to answer one probe is the anti-pattern
-    * (the reference also probes its stored band index, MatcherQuery.py:19-52).
-    */
-  def topMatches(spark: SparkSession, docs: DataFrame, queryText: String, k: Int = 10,
-      cfg: GraftConfig = GraftConfig.default,
-      requireBands: Int = 2): DataFrame = {
-    val pipe = new DedupPipeline(spark, cfg)
-    val sigs = pipe.signatureStage(pipe.extractStage(docs, fromHtml = false))
-      .toDF().where(col("hashable")).cache()
-    val bands = pipe.bandStage(sigs)
-    // top-k is tiny: eagerly materialize it so the ad-hoc signature cache
-    // can be dropped immediately instead of leaking one pinned sig table
-    // per call for the session lifetime
-    val out = topMatchesFromIndex(spark, sigs, bands, queryText, k, cfg, requireBands)
-      .localCheckpoint(true)
-    sigs.unpersist()
-    out
-  }
-
   /** Bump when an index SEMANTICS change (not a kernel-output change — the
     * kernel fingerprint below catches those automatically) invalidates
     * persisted indexes.

@@ -63,8 +63,7 @@ final case class PipelineOptions(
     // corpus is boilerplate-heavy and simhash bit-majorities collapse
     simHashScoreFloor: Double = 30.0,
     jaccardVerify: Boolean = false,
-    jaccardThreshold: Double = 0.3,
-    numPartitions: Int = 0 // 0 = leave to session default
+    jaccardThreshold: Double = 0.3
 )
 
 /** Per-doc computed features (one row per input url). The exact-dup identity
@@ -540,10 +539,7 @@ final class DedupPipeline(
         s"bands=${cfg.bands},sh=${opts.simHashChannel},shmax=${opts.simHashMaxHamming},bandsv=2",
         Seq("signatures")) {
       val all = repBandTable(sigs0, Some(reps))
-      if (stages.isEmpty) all
-      else graft.storage.TableStore.bandLayout(all,
-        if (opts.numPartitions > 0) opts.numPartitions
-        else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      if (stages.isEmpty) all else graft.storage.TableStore.bandLayout(all)
     }
     new PairGraph(exactEdges,
       pairTail(bandTable, sigs0.where(col("hashable")), stages, text, identity), Some(reps))
@@ -644,6 +640,15 @@ final class DedupPipeline(
 
   // ---- probe-only incremental pairs ------------------------------------
 
+  /** Rows of `pairs` whose `x` or `y` endpoint is in `ids` (doc_id), each
+    * row once. */
+  private def touching(pairs: DataFrame, ids: DataFrame, x: String, y: String): DataFrame =
+    pairs
+      .join(broadcast(ids).withColumnRenamed("doc_id", x), Seq(x), "left_semi")
+      .unionByName(pairs
+        .join(broadcast(ids).withColumnRenamed("doc_id", y), Seq(y), "left_semi")
+        .join(broadcast(ids).withColumnRenamed("doc_id", x), Seq(x), "left_anti"))
+
   /** PROBE-ONLY incremental pair production — the scale-correct shape for
     * "a small new batch lands on a 10^12-doc corpus" (≅ the reference's
     * addBinarySample → matchSample flow, which probes ONLY the new sample's
@@ -660,61 +665,36 @@ final class DedupPipeline(
     *    exact hashes (a broadcast semi-join ≡ point lookups on an
     *    Iceberg bloom/zorder layout); group reps are re-elected over the
     *    touched groups only.
-    *  - LSH channel: only NEW reps band. The old band table — passed in
-    *    from its persisted form, or derived here with one linear rep-banding
-    *    pass over `oldSigs0` when absent — is semi-joined on the new reps'
-    *    band keys (broadcast: ~26 keys per new rep), so every candidate
-    *    group contains a new doc by construction; the group membership for
-    *    a probed key equals the full-batch group (old postings + new reps),
-    *    hence stop-band cap and ≥2-band semantics are bit-identical.
+    *  - LSH channel: only NEW reps band. The persisted old band table is
+    *    semi-joined on the new reps' band keys (broadcast: ~26 keys per new
+    *    rep), so every candidate group contains a new doc by construction;
+    *    the group membership for a probed key equals the full-batch group
+    *    (old postings + new reps), hence stop-band cap and ≥2-band semantics
+    *    are bit-identical.
     *  - Rep re-election across the old/new boundary (a new doc with a
     *    smaller doc_id joins an old exact group): the replaced old rep's
     *    postings are anti-joined out and the new rep's are emitted fresh —
     *    the signatures are identical (same content), so this is a pure
     *    doc_id rekey, exactly what the full batch would have banded.
     *
-    * `oldBands`, when given, must be the rep-only band table of `oldSigs0`
-    * under the same cfg/opts (minhash bands plus the simhash chunk tables
-    * when `simHashChannel` is on) — i.e. what `run()`'s "bands" ledger stage
-    * or `MaintenanceOps.buildOrLoadDedupIndex` persists.
+    * `oldBands` must be the rep-only band table of `oldSigs0` under the
+    * same cfg/opts (minhash bands plus the simhash chunk tables when
+    * `simHashChannel` is on) — i.e. what `run()`'s "bands" ledger stage or
+    * `MaintenanceOps.buildOrLoadDedupIndex` persists. Passing it in keeps
+    * the probe off exactGroups' corpus-wide groupBy: only the batch-touched
+    * exact groups of the old side are aggregated.
+    *
+    * The result carries the lazy pair output (`ProbeParts.pairs`: the
+    * producer's candidate → verify tail with a touching-new filter, unioned
+    * with the touched exact edges) and the state deltas a rolling index
+    * appends (`newBands`) and tombstones (`replacedReps`) — one plan serves
+    * both, so `DedupJob`'s rolling mode never builds the probe twice.
     *
     * Assumes `newSigs0` doc_ids are disjoint from the old corpus (re-sent
     * urls should be excluded first via `MaintenanceOps.newDocs`).
     */
-  def probeDupPairs(oldSigs0: DataFrame, newSigs0: DataFrame,
-      oldBands: Option[DataFrame] = None): DataFrame =
-    probeDupPairsFrom(probeParts(oldSigs0, newSigs0, oldBands), oldSigs0, newSigs0)
-
-  /** As `probeDupPairs` over an ALREADY-BUILT `ProbeParts` — callers that
-    * also consume the state deltas (DedupJob's rolling mode) must not pay
-    * the probe-plan construction (old-side exact-group aggregation, band
-    * probe) twice. Runs the producer's tail with the touching-new filter.
-    */
-  private[graft] def probeDupPairsFrom(parts: DedupPipeline.ProbeParts,
-      oldSigs0: DataFrame, newSigs0: DataFrame): DataFrame = {
-    val newIds = newSigs0.select("doc_id")
-    val allHashable = oldSigs0.where(col("hashable")).unionByName(newSigs0.where(col("hashable")))
-    new PairGraph(parts.exactEdges,
-      pairTail(parts.candInput, allHashable, None, None, touching(_, newIds, "a", "b")),
-      None).pairs
-  }
-
-  /** Rows of `pairs` whose `x` or `y` endpoint is in `ids` (doc_id), each
-    * row once. */
-  private def touching(pairs: DataFrame, ids: DataFrame, x: String, y: String): DataFrame =
-    pairs
-      .join(broadcast(ids).withColumnRenamed("doc_id", x), Seq(x), "left_semi")
-      .unionByName(pairs
-        .join(broadcast(ids).withColumnRenamed("doc_id", y), Seq(y), "left_semi")
-        .join(broadcast(ids).withColumnRenamed("doc_id", x), Seq(x), "left_anti"))
-
-  /** The probe plan's inputs and state deltas (see `ProbeParts`) — split
-    * out so tests can assert the candidate volume scales with the batch,
-    * and so `DedupJob`'s rolling incremental mode can append `newBands` /
-    * tombstone `replacedReps` into its persisted index.
-    */
   private[graft] def probeParts(oldSigs0: DataFrame, newSigs0: DataFrame,
-      oldBands: Option[DataFrame]): DedupPipeline.ProbeParts = {
+      oldBands: DataFrame): DedupPipeline.ProbeParts = {
     // ---- exact channel, touched groups only ----
     val newExact = newSigs0.where(col("has_exact"))
     val touchedHashes = newExact.select("exact_hash", "exact_hash2").distinct()
@@ -743,41 +723,37 @@ final class DedupPipeline(
       DedupPipeline.packedBandKey(col("band_id"), col("band_hash")).as("band_key"),
       col("band_id"), col("band_hash"), col("doc_id"))
     val probeKeys = packKey(newBands).select("band_key").distinct()
-    val oldBandTable = oldBands.getOrElse {
-      // no persisted band table: rep-banding the old corpus here pays
-      // exactGroups' CORPUS-WIDE groupBy(exact_hash, exact_hash2) shuffle
-      // on every probe — candidate volume stays ∝ batch, but this
-      // re-aggregation is exactly what the persisted band table
-      // (buildOrLoadDedupIndex / run()'s bands stage) exists to avoid.
-      // Acceptable for one-shot index-less probes; at scale, pass oldBands.
-      System.err.println("[graft] probeParts: no persisted band table — " +
-        "re-aggregating the old corpus to rep-band it (pass oldBands from " +
-        "buildOrLoadDedupIndex to avoid this per-batch shuffle)")
-      repBandTable(oldSigs0)
-    }
-    val oldProbe = packKey(oldBandTable)
+    val oldProbe = packKey(oldBands)
       .join(broadcast(probeKeys), Seq("band_key"), "left_semi")
       .join(broadcast(replacedOldReps), Seq("doc_id"), "left_anti")
       .select("band_id", "band_hash", "doc_id")
+    val candInput = oldProbe.unionByName(newBands.select("band_id", "band_hash", "doc_id"))
+
+    // ---- the producer's tail over the probed bands, new-touching pairs only
+    val allHashable = oldSigs0.where(col("hashable")).unionByName(newSigs0.where(col("hashable")))
+    val verified = pairTail(candInput, allHashable, None, None,
+      touching(_, newSigs0.select("doc_id"), "a", "b"))
 
     DedupPipeline.ProbeParts(
-      oldProbe.unionByName(newBands.select("band_id", "band_hash", "doc_id")),
+      candInput,
       exactEdges,
       newBands.select("doc_id", "band_id", "band_hash"),
-      replacedOldReps)
+      replacedOldReps,
+      new PairGraph(exactEdges, verified, None).pairs)
   }
 }
 
 object DedupPipeline {
-  /** What a probe-style incremental step computes, split out for state
-    * maintenance: `candInput` feeds candidate generation; `exactEdges` are
-    * the exact-channel pairs touching new docs; `newBands` are the NEW
-    * reps' band postings (what a rolling index must append); `replacedReps`
-    * are old rep doc_ids whose groups re-elected a new rep (what a rolling
-    * index must tombstone so the stored band table stays rep-only).
+  /** What a probe-style incremental step computes: `candInput` feeds
+    * candidate generation; `exactEdges` are the exact-channel pairs touching
+    * new docs; `newBands` are the NEW reps' band postings (what a rolling
+    * index must append); `replacedReps` are old rep doc_ids whose groups
+    * re-elected a new rep (what a rolling index must tombstone so the stored
+    * band table stays rep-only); `pairs` is the lazy merged-channel pair
+    * output (src, dst, score, hamming, flags) touching new docs.
     */
   final case class ProbeParts(candInput: DataFrame, exactEdges: DataFrame,
-      newBands: DataFrame, replacedReps: DataFrame)
+      newBands: DataFrame, replacedReps: DataFrame, pairs: DataFrame)
 
   /** Single-long shuffle key for a (band_id, band_hash) posting — xxhash64
     * over both columns, preserving the FULL 64-bit band-hash entropy. The

@@ -24,23 +24,21 @@ trait TableStore extends Serializable {
   def exists(spark: SparkSession, table: String): Boolean
   def write(df: DataFrame, table: String): Unit
   def append(df: DataFrame, table: String): Unit
-
-  /** Persist with the band-table physical layout (see
-    * `TableStore.bandLayout` — THE single statement of that contract). */
-  def writeBanded(df: DataFrame, table: String, numPartitions: Int): Unit =
-    write(TableStore.bandLayout(df, numPartitions), table)
 }
 
 object TableStore {
   /** THE band-table layout contract, stated once: postings are co-located
     * on (band_id, band_hash) so a probe of one band key touches one
     * partition — the local analog of the Iceberg layout
-    * `PARTITIONED BY (band_id, bucket(N, band_hash))`. Every persisted
-    * band surface (flagship run resume table, the query-match index, the
-    * incremental base generations, index rebuilds) goes through here.
+    * `PARTITIONED BY (band_id, bucket(N, band_hash))`, with N the session's
+    * `spark.sql.shuffle.partitions`. Every persisted rep-only band table
+    * (flagship run resume table, the dedup index and its rebuilds, the
+    * incremental base generations) goes through here; the query-match
+    * index (`qm_bands`) is a plain `bandStage` table.
     */
-  def bandLayout(df: DataFrame, numPartitions: Int): DataFrame =
-    df.repartition(numPartitions, col("band_id"), col("band_hash"))
+  def bandLayout(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt,
+      col("band_id"), col("band_hash"))
 
   /** The default local implementation. */
   val parquet: TableStore = new ParquetStore

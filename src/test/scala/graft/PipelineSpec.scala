@@ -334,7 +334,9 @@ class DedupPipelineSpec extends SparkTestBase {
     // near-dup clusters straddle the old/new boundary
     val sigs = pipe.signatureStage(pipe.extractStage(corpus, fromHtml = true)).toDF().cache()
     val isNew = pmod(xxhash64(col("url")), lit(4)) === 0
-    assertUnique(pipe.probeDupPairs(sigs.where(!isNew), sigs.where(isNew)), "probe")
+    val oldSigs = sigs.where(!isNew)
+    assertUnique(pipe.probeParts(oldSigs, sigs.where(isNew), pipe.repBandTable(oldSigs)).pairs,
+      "probe")
     sigs.unpersist()
     corpus.unpersist()
   }
@@ -390,7 +392,7 @@ class DedupPipelineSpec extends SparkTestBase {
     val oldSigs = sigs.where(pmod(col("doc_id"), lit(4)) =!= 0)
     val newSigs = sigs.where(pmod(col("doc_id"), lit(4)) === 0)
     val beforeProbe = persisted
-    val probed = pipe.probeDupPairs(oldSigs, newSigs)
+    val probed = pipe.probeParts(oldSigs, newSigs, pipe.repBandTable(oldSigs)).pairs
     assert(probed.count() > 0)
     assert((persisted -- beforeProbe).isEmpty, "the probe pins nothing")
     DedupPipeline.releaseCheckpoint(sigs)
@@ -515,6 +517,15 @@ class DedupJobSpec extends SparkTestBase {
       parsed.opts.maxBandGroupSize == 99)
     intercept[IllegalArgumentException] { graft.DedupJob.parse(Array("--input", "x")) }
     intercept[IllegalArgumentException] { graft.DedupJob.parse(Array("--bogus")) }
+    // a flag with no value, or a non-integer one, names the flag
+    val noValue = intercept[IllegalArgumentException] {
+      graft.DedupJob.parse(Array("--input", "i", "--output"))
+    }
+    assert(noValue.getMessage.contains("--output"))
+    val notInt = intercept[IllegalArgumentException] {
+      graft.DedupJob.parse(Array("--input", "i", "--output", "o", "--compact-every", "x"))
+    }
+    assert(notInt.getMessage.contains("--compact-every"))
     val gone = intercept[IllegalArgumentException] {
       graft.DedupJob.parse(Array("--input", "i", "--output", "o", "--hot-band-prefilter"))
     }

@@ -216,31 +216,30 @@ class PlanSpec extends SparkTestBase {
     // an Aggregate over the old signature table with no Join beneath it is a
     // corpus-wide re-aggregation — the persisted-index probe must restrict
     // the old side to batch-touched groups (a semi join) BEFORE any groupBy.
-    // Asserted on each DedupPipeline.ProbeParts member and on the full probe plan: the
-    // candidate stage is lazy, so the final plan shows every subtree.
+    // Asserted on each DedupPipeline.ProbeParts member and on the full pair plan: the
+    // candidate stage is lazy, so the pair plan shows every subtree.
     def corpusWideAggs(df: org.apache.spark.sql.DataFrame): Seq[Aggregate] =
       df.queryExecution.optimizedPlan.collect {
         case a: Aggregate if scansOldSigs(a.child) &&
           a.child.collectFirst { case j: Join => j }.isEmpty => a
       }
-    val indexed = pipe.probeParts(oldSigs, newSigs, Some(oldBands))
+    val indexed = pipe.probeParts(oldSigs, newSigs, oldBands)
     for ((df, what) <- Seq(indexed.candInput -> "candInput",
         indexed.exactEdges -> "exactEdges", indexed.newBands -> "newBands",
         indexed.replacedReps -> "replacedReps"))
       assert(corpusWideAggs(df).isEmpty,
         s"indexed probe re-aggregates the old corpus in $what:\n" +
           df.queryExecution.optimizedPlan)
-    val probed = pipe.probeDupPairs(oldSigs, newSigs, Some(oldBands))
+    val probed = indexed.pairs
     assert(corpusWideAggs(probed).isEmpty,
       s"indexed probe re-aggregates the old corpus:\n${probed.queryExecution.optimizedPlan}")
-    // positive control: the index-less fallback DOES pay that aggregation
-    // (documented), proving this test detects it, in its parts and in the
-    // full probe plan
-    val fallback = pipe.probeParts(oldSigs, newSigs, None)
-    for (df <- Seq(fallback.candInput, pipe.probeDupPairs(oldSigs, newSigs, None)))
+    // positive control: an unpersisted rep-only band table still carries the
+    // corpus-wide exact-group aggregation, proving this test detects it, in
+    // the parts and in the full pair plan
+    val unpersisted = pipe.probeParts(oldSigs, newSigs, pipe.repBandTable(oldSigs))
+    for (df <- Seq(unpersisted.candInput, unpersisted.pairs))
       assert(corpusWideAggs(df).nonEmpty,
-        "detector lost sight of the fallback's corpus-wide aggregation — " +
-          "if the fallback no longer re-aggregates, update the probeParts docs")
+        "detector lost sight of repBandTable's corpus-wide aggregation")
   }
 
   test("small dimension joins broadcast (Catalyst stats/AQE)") {

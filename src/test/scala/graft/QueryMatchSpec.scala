@@ -17,10 +17,21 @@ class QueryMatchSpec extends SparkTestBase {
     ("u3", (1 to 50).map(i => w("beta", i)).mkString(" ")),
     ("u4", "tiny"))
 
+  /** Top-k matches through the production query path: the corpus index
+    * built on a fresh temp ledger, then probed. */
+  private def indexedMatches(docs: org.apache.spark.sql.DataFrame, query: String,
+      k: Int): org.apache.spark.sql.DataFrame = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-qm").toString
+    val cfg = graft.kernel.GraftConfig.default
+    val ledger = new graft.ledger.Ledger(spark, tmp, cfg.configHash)
+    val (sigs, bands) = QueryMatch.buildOrLoadIndex(spark, docs, ledger, corpusTag = "t", cfg)
+    QueryMatch.topMatchesFromIndex(spark, sigs, bands, query, k)
+  }
+
   test("query match finds near-identical corpus doc, ranked first") {
     val docs = corpusRows.toDF("url", "text")
     val query = (1 to 50).map(i => w("alpha", i)).mkString(" ")
-    val out = QueryMatch.topMatches(spark, docs, query, k = 5).collect()
+    val out = indexedMatches(docs, query, k = 5).collect()
     assert(out.nonEmpty)
     assert(out.head.getString(0) == "u1")
     assert(out.head.getDouble(2) == 100.0)
@@ -32,7 +43,7 @@ class QueryMatchSpec extends SparkTestBase {
 
   test("unhashable query returns empty WITH the result schema") {
     val docs = corpusRows.toDF("url", "text")
-    val out = QueryMatch.topMatches(spark, docs, "too short", k = 5)
+    val out = indexedMatches(docs, "too short", k = 5)
     assert(out.isEmpty)
     // the result contract must hold even for the empty case — a schema-less
     // frame would crash callers only on short queries (data-dependent)
@@ -61,8 +72,8 @@ class QueryMatchSpec extends SparkTestBase {
       s"probe must not re-sign the corpus:\n$plan")
     val rows = out.collect()
     assert(rows.nonEmpty && rows.head.getString(0) == "u1" && rows.head.getDouble(2) == 100.0)
-    // identical results to the in-flight variant
-    val direct = QueryMatch.topMatches(spark, docs, query, k = 5).collect()
+    // identical results to the ledger-built index
+    val direct = indexedMatches(docs, query, k = 5).collect()
     assert(rows.map(r => (r.getString(0), r.getDouble(2))).toSeq ==
       direct.map(r => (r.getString(0), r.getDouble(2))).toSeq)
   }
@@ -119,8 +130,8 @@ class MaintenanceSpec extends SparkTestBase {
 
     val pipe = new graft.pipeline.DedupPipeline(spark)
     val oldSigs = pipe.signatureStage(pipe.extractStage(oldDocs, fromHtml = false)).toDF()
-    val (newSigs, incPairs) =
-      MaintenanceOps.incrementalDupPairs(spark, oldSigs, newDocs)
+    val newSigs = pipe.signatureStage(pipe.extractStage(newDocs, fromHtml = false)).toDF()
+    val incPairs = pipe.probeParts(oldSigs, newSigs, pipe.repBandTable(oldSigs)).pairs
     val newIdSet = newSigs.select("doc_id").as[Long].collect().toSet
     assert(newIdSet.size == 4)
 
@@ -153,7 +164,8 @@ class MaintenanceSpec extends SparkTestBase {
 
     val pipe = new graft.pipeline.DedupPipeline(spark)
     val oldSigs = pipe.signatureStage(pipe.extractStage(oldDocs, fromHtml = false)).toDF()
-    val (newSigs, incPairs) = MaintenanceOps.incrementalDupPairs(spark, oldSigs, newDocs)
+    val newSigs = pipe.signatureStage(pipe.extractStage(newDocs, fromHtml = false)).toDF()
+    val incPairs = pipe.probeParts(oldSigs, newSigs, pipe.repBandTable(oldSigs)).pairs
     val newIdSet = newSigs.select("doc_id").as[Long].collect().toSet
 
     val batch = pipe.dupPairs(oldDocs.unionByName(newDocs), fromHtml = false)
@@ -183,9 +195,11 @@ class MaintenanceSpec extends SparkTestBase {
     val oldSigs = pipe.signatureStage(pipe.extractStage(oldDocs, fromHtml = false)).toDF().cache()
     val newSigs = pipe.signatureStage(pipe.extractStage(newDocs, fromHtml = false)).toDF().cache()
 
-    val candRows = pipe.probeParts(oldSigs, newSigs, None).candInput.count()
+    val probe = pipe.probeParts(oldSigs, newSigs, pipe.repBandTable(oldSigs))
+    val candRows = probe.candInput.count()
     // full-union band table volume (what the old full-union shuffle carried)
-    val unionBands = pipe.probeParts(oldSigs.limit(0), oldSigs.unionByName(newSigs), None)
+    val noOld = oldSigs.limit(0)
+    val unionBands = pipe.probeParts(noOld, oldSigs.unionByName(newSigs), pipe.repBandTable(noOld))
       .candInput.count()
     // every posting of the 2 new docs (26 keys each: 20 minhash + 6 simhash)
     // plus at most incidental old collisions — nowhere near the union table
@@ -194,7 +208,7 @@ class MaintenanceSpec extends SparkTestBase {
     assert(unionBands > candRows * 10,
       s"union band table $unionBands vs probed input $candRows: probe must not scale with corpus")
     // and the pair output over this disjoint batch is empty, like the batch answer
-    assert(pipe.probeDupPairs(oldSigs, newSigs).isEmpty)
+    assert(probe.pairs.isEmpty)
   }
 
   test("incremental from ledger index: old corpus is never re-signed on resume") {
@@ -207,25 +221,28 @@ class MaintenanceSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("graft-incidx").toString
     val cfg = graft.kernel.GraftConfig.default
     val ledger = new graft.ledger.Ledger(spark, tmp, cfg.configHash)
+    val pipe = new graft.pipeline.DedupPipeline(spark)
+    val newSigs = pipe.signatureStage(pipe.extractStage(newDocs, fromHtml = false)).toDF()
+    // `old` stays by-name down to the index build
+    def probed(old: => org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+      val (oldSigs, oldBands) =
+        MaintenanceOps.buildOrLoadDedupIndex(spark, old, ledger, corpusTag = "inc")
+      pipe.probeParts(oldSigs, newSigs, oldBands).pairs
+        .select("src", "dst").as[(Long, Long)].collect().toSet
+    }
 
     // build the index once
-    val (_, pairs1) = MaintenanceOps.incrementalDupPairsFromIndex(
-      spark, oldDocs, newDocs, ledger, corpusTag = "inc")
-    val got1 = pairs1.select("src", "dst").as[(Long, Long)].collect().toSet
+    val got1 = probed(oldDocs)
     assert(got1.nonEmpty)
 
     // poisoned old corpus: any evaluation explodes — the committed ledger
     // index must answer without touching it
     val boom = udf(() => { sys.error("old corpus was re-signed"); "" })
     val poisoned = spark.range(1).select(boom().as("url"), boom().as("text"))
-    val (_, pairs2) = MaintenanceOps.incrementalDupPairsFromIndex(
-      spark, poisoned, newDocs, ledger, corpusTag = "inc")
-    assert(pairs2.select("src", "dst").as[(Long, Long)].collect().toSet == got1)
+    assert(probed(poisoned) == got1)
 
     // ground truth: probe ≡ batch restricted to new
-    val pipe = new graft.pipeline.DedupPipeline(spark)
-    val newIds = pipe.signatureStage(pipe.extractStage(newDocs, fromHtml = false))
-      .toDF().select("doc_id").as[Long].collect().toSet
+    val newIds = newSigs.select("doc_id").as[Long].collect().toSet
     val batch = pipe.dupPairs(oldDocs.unionByName(newDocs), fromHtml = false)
       .select("src", "dst").as[(Long, Long)].collect().toSet
       .filter(p => newIds.contains(p._1) || newIds.contains(p._2))
@@ -234,7 +251,7 @@ class MaintenanceSpec extends SparkTestBase {
 
   test("band-index rebuild reproduces the PROBE-flavor band table exactly") {
     // incl. an exact-dup pair: the rebuild must be rep-only + simhash chunk
-    // tables — the flavor probeDupPairs contractually requires
+    // tables — the flavor probeParts contractually requires
     val t1 = (1 to 40).map(i => s"ra${('a' + i % 26).toChar}$i").mkString(" ")
     val docs = Seq(
       ("u1", t1), ("u1-copy", t1),
@@ -375,13 +392,18 @@ class MaintenanceSpec extends SparkTestBase {
   }
 
   test("delete cascades through signature and band tables") {
-    val sigs = Seq((1L, "u1"), (2L, "u2")).toDF("doc_id", "url")
-    val bands = Seq((0, 10L, 1L), (0, 10L, 2L), (1, 11L, 1L))
-      .toDF("band_id", "band_hash", "doc_id")
-    // toy schema without exact-hash columns → plain filter cascade flavor
-    val (s2, b2) = MaintenanceOps.deleteDocs(sigs, bands, Seq(1L), repOnlyBands = false)
-    assert(s2.select("doc_id").as[Long].collect().toSeq == Seq(2L))
-    assert(b2.select("doc_id").as[Long].collect().toSeq == Seq(2L))
+    def t(tag: String): String =
+      (1 to 40).map(w => s"$tag${('a' + w % 26).toChar}$w").mkString(" ")
+    val docs = Seq(("dc-1", t("dc")), ("dc-2", t("dq"))).toDF("url", "text")
+    val pipe = new graft.pipeline.DedupPipeline(spark)
+    val sigs = pipe.signatureStage(pipe.extractStage(docs, fromHtml = false)).toDF()
+    val bands = pipe.repBandTable(sigs)
+    val ids = sigs.select("url", "doc_id").as[(String, Long)].collect().toMap
+    val (s2, b2) = MaintenanceOps.deleteDocs(sigs, bands, Seq(ids("dc-1")))
+    assert(s2.select("doc_id").as[Long].collect().toSeq == Seq(ids("dc-2")))
+    assert(b2.select("doc_id").as[Long].distinct().collect().toSeq == Seq(ids("dc-2")))
+    assert(b2.count() == bands.where(col("doc_id") === ids("dc-2")).count(),
+      "the survivor keeps every posting")
   }
 
   test("paragraph hashes: one row per non-empty paragraph, stable") {
@@ -400,7 +422,10 @@ class MaintenanceSpec extends SparkTestBase {
       (1L, "shared paragraph content here\n\nunique to one entirely"),
       (2L, "shared paragraph content here\n\nunique to one entirelX"))
       .toDF("doc_id", "text")
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
     val d = MaintenanceOps.pairDiff(spark, docs, 1L, 2L).collect()
+    assert((persisted -- before).isEmpty, "pairDiff must not pin a cached table")
     assert(d.exists(r => r.getBoolean(2) && r.getInt(3) == 0))
     assert(d.exists(r => !r.getBoolean(2) && r.getInt(3) == 1), "1-char edit found by levenshtein")
   }
