@@ -1,6 +1,8 @@
 package graft.cluster
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** Iterative DataFrame connected components via alternating large-star /
@@ -15,30 +17,39 @@ import org.apache.spark.sql.functions._
   * AQE split skewed reduce partitions. Converges in O(log n) rounds;
   * lineage is cut every round with localCheckpoint.
   *
+  * Small graphs never reach the loop: `run` takes the edges in ONE action,
+  * a collect bounded per partition at ⌈cap / numPartitions⌉ edges into
+  * flat `long` arrays, and runs a driver union-find when every partition
+  * fits — no cache, no count, no second pass over the producer. An
+  * overflowing partition sends the same edge RDD into the loop.
+  *
   * Input: edge DataFrame with long columns (src, dst). Output: (id, component)
   * where component = min node id of the component. Nodes only appear if they
   * occur in an edge — callers union isolated nodes themselves.
   */
 object ConnectedComponents {
 
-  /** Size-adaptive cutover: below this many (deduped) edges the component
+  /** Size-adaptive cutover: up to about this many edges the component
     * computation runs as a driver-side union-find versus ~30 scheduled
     * shuffle stages for the star loop, which at small edge counts is pure
     * stage-latency (the reference's clustering is driver-side DFS for the
     * same reason). Above it, the distributed star-contraction loop runs.
     * Identical output either way (asserted by test on both paths).
     *
-    * Driver memory cost is REAL, not a handful of MB: collected boxed
-    * (Long,Long) tuples plus two HashMaps cost roughly 200–400 bytes per
-    * edge, so 3M edges occupy several hundred MB of driver heap. The
-    * ceiling below is therefore gated on the actual driver heap via
-    * `effectiveDriverThreshold` (≈ heap/4 ÷ 512 B/edge): a default-1g
-    * cluster driver cuts over at ~500k edges, an 8g bench driver keeps the
-    * full 3M.
+    * The bound is enforced per partition while the edges are collected
+    * (`cap / numPartitions` edges each, see `run`), so the driver never
+    * holds much more than `cap` edges even when the graph is far larger.
+    * Collected edges land in flat `long` arrays (16 B/edge) and the
+    * union-find keeps an open-addressed primitive node table plus flat
+    * int/byte arrays, roughly 100 B/edge in all. The ceiling below is
+    * still gated on the actual driver heap via `effectiveDriverThreshold`
+    * at a conservative 512 B/edge: a default-1g cluster driver cuts over at
+    * ~500k edges, an 8g bench driver keeps the full 3M.
     */
   val DriverEdgeThreshold: Long = 3000000L
 
-  /** min(cap, quarter of driver heap at a conservative 512 bytes/edge). */
+  /** min(cap, quarter of driver heap at a conservative 512 bytes/edge):
+    * the total edge budget `run` splits evenly over the edge partitions. */
   def effectiveDriverThreshold(cap: Long = DriverEdgeThreshold): Long =
     math.min(cap, Runtime.getRuntime.maxMemory() / 4 / 512)
 
@@ -49,31 +60,41 @@ object ConnectedComponents {
     */
   @volatile var lastRunIterations: Int = -1
 
+  /** One action over the edges: the canonical edge RDD is taken once (under
+    * AQE that runs the producer's shuffle map stages) and collected with a
+    * per-partition bound of ⌈cap / numPartitions⌉ edges. If every partition
+    * fits, union-find runs on the collected arrays. Otherwise the star loop
+    * starts from that same RDD: its shuffle outputs are already
+    * materialized, so only its final stage re-runs and the producer is
+    * never recomputed. `driverThreshold = 0` forces the star loop.
+    */
   def run(edgesIn: DataFrame, maxIterations: Int = 25,
       driverThreshold: Long = -1L): DataFrame = {
     val driverEdgeCap =
       if (driverThreshold >= 0) driverThreshold
       else effectiveDriverThreshold()
     val spark = edgesIn.sparkSession
+    import spark.implicits._
     // canonical undirected edges, self-loops dropped. NOT deduped yet: the
     // driver path's union-find dedupes for free, so the distinct shuffle is
     // only paid on the distributed path.
-    val canonical = edgesIn
+    val qe = edgesIn
       .select(
         least(col("src"), col("dst")).as("lo"),
         greatest(col("src"), col("dst")).as("hi"))
       .where(col("lo") =!= col("hi"))
-      .cache() // materialize upstream (verify etc.) exactly once
-
-    val nEdges = canonical.count()
-    if (nEdges <= driverEdgeCap) {
-      val result = runDriver(spark, canonical)
-      canonical.unpersist()
-      lastRunIterations = 0
-      return result
+      .queryExecution
+    // one SQL execution, named like an action, so the plan and its metrics
+    // still reach SQL and query-execution listeners
+    val (canonical, collected) = SQLExecution.withNewExecutionId(qe, Some("connectedComponents")) {
+      val rdd = qe.toRdd
+      val nParts = math.max(1, rdd.getNumPartitions)
+      (rdd, rdd.sparkContext.runJob(rdd,
+        (it: Iterator[InternalRow]) => collectBounded(it, (driverEdgeCap + nParts - 1) / nParts)))
     }
-    var edges = canonical.distinct().localCheckpoint(eager = true)
-    canonical.unpersist()
+    if (collected.forall(_ != null)) { lastRunIterations = 0; return runDriver(spark, collected) }
+    var edges = canonical.map(r => (r.getLong(0), r.getLong(1))).toDF("lo", "hi")
+      .distinct().localCheckpoint(eager = true)
 
     // fixpoint detection by edge-set checksum: one single-row aggregation per
     // iteration instead of a count + a full shuffle-compare (except()); the
@@ -128,46 +149,52 @@ object ConnectedComponents {
     comp.unionByName(roots)
   }
 
-  /** Driver-side union-find with path compression + union-by-rank, then a
-    * relabel to the component-minimum id so the output is bit-identical to
-    * the distributed path's (component = min node id).
+  /** One partition's edges as flat (lo, hi) longs, or null once it holds
+    * more than `maxEdges` (the rest of the partition is not read). */
+  private def collectBounded(it: Iterator[InternalRow], maxEdges: Long): Array[Long] = {
+    val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+    var n = 0L
+    while (it.hasNext) {
+      if (n >= maxEdges) return null
+      val r = it.next()
+      buf.addOne(r.getLong(0)).addOne(r.getLong(1))
+      n += 1
+    }
+    buf.result()
+  }
+
+  /** Driver-side union-find with path compression + union-by-rank; each
+    * root carries its component's minimum id, so the output is
+    * bit-identical to the distributed path's (component = min node id).
     *
-    * Node bookkeeping runs on an open-addressed PRIMITIVE long map
-    * (node → dense index) and flat int/long arrays: the earlier
-    * java.util.HashMap[Long, Long] form boxed every node and every rank
-    * update (~200–400 B/edge of driver garbage — the reason the cutover
-    * threshold is heap-gated), and at the bench corpus (~880k collected
-    * edges) spent a measurable fraction of the CC stage in autoboxing +
-    * rehash. Same union-find, same relabel contract, same output rows.
+    * Input is the per-partition flat (lo, hi) arrays of the bounded
+    * collect, read in place: no boxed tuple per edge. Node bookkeeping runs
+    * on an open-addressed PRIMITIVE long map (node → dense index) and flat
+    * int/byte/long arrays.
     */
-  private def runDriver(spark: org.apache.spark.sql.SparkSession, edges: DataFrame): DataFrame = {
+  private def runDriver(spark: SparkSession, parts: Array[Array[Long]]): DataFrame = {
     import spark.implicits._
-    val pairs = edges.select(col("lo"), col("hi")).as[(Long, Long)].collect()
+    val maxNodes = math.max(16, parts.map(_.length).sum) // ≤ 2 nodes per edge
     // node id → dense index (insertion order preserved for output stability)
-    val capWant = math.max(16, pairs.length * 4)
-    val tableCap = Integer.highestOneBit(capWant - 1) * 2
+    val tableCap = Integer.highestOneBit(maxNodes * 2 - 1) * 2
     val keys = new Array[Long](tableCap)
     val slotIdx = new Array[Int](tableCap)
     java.util.Arrays.fill(slotIdx, -1)
+    val nodeIds = new Array[Long](maxNodes)
+    val parent = new Array[Int](maxNodes)
+    val rank = new Array[Byte](maxNodes)
+    val minId = new Array[Long](maxNodes) // per root: the component-minimum id
     var n = 0
-    var nodeIds = new Array[Long](math.max(16, pairs.length))
     def indexOf(k: Long): Int = {
       var i = (graft.hash.SimHash.mix64(k) & (tableCap - 1)).toInt
       while (slotIdx(i) != -1) {
         if (keys(i) == k) return slotIdx(i)
         i = (i + 1) & (tableCap - 1)
       }
-      keys(i) = k
-      slotIdx(i) = n
-      if (n >= nodeIds.length) nodeIds = java.util.Arrays.copyOf(nodeIds, nodeIds.length * 2)
-      nodeIds(n) = k
+      keys(i) = k; slotIdx(i) = n; nodeIds(n) = k; parent(n) = n; minId(n) = k
       n += 1
       n - 1
     }
-    val parent = new Array[Int](math.max(16, pairs.length * 2))
-    val rank = new Array[Byte](parent.length)
-    var m = 0 // nodes materialized in parent so far
-    def ensure(i: Int): Unit = while (m <= i) { parent(m) = m; m += 1 }
     def find(x0: Int): Int = {
       var x = x0
       while (parent(x) != x) {
@@ -176,33 +203,25 @@ object ConnectedComponents {
       }
       x
     }
-    var e = 0
-    while (e < pairs.length) {
-      val (a, b) = pairs(e)
-      val ia = indexOf(a); val ib = indexOf(b)
-      ensure(math.max(ia, ib))
-      val ra = find(ia); val rb = find(ib)
-      if (ra != rb) {
-        val ka = rank(ra); val kb = rank(rb)
-        if (ka < kb) parent(ra) = rb
-        else if (ka > kb) parent(rb) = ra
-        else { parent(rb) = ra; rank(ra) = (ka + 1).toByte }
+    for (edges <- parts) {
+      var e = 0
+      while (e < edges.length) {
+        val ra = find(indexOf(edges(e))); val rb = find(indexOf(edges(e + 1)))
+        if (ra != rb) {
+          val ka = rank(ra); val kb = rank(rb)
+          val root = if (ka < kb) rb else ra
+          val child = ra + rb - root
+          parent(child) = root
+          if (ka == kb) rank(root) = (ka + 1).toByte
+          if (minId(child) < minId(root)) minId(root) = minId(child)
+        }
+        e += 2
       }
-      e += 1
     }
-    // relabel roots to the minimum member id (the distributed contract)
-    val minOfRoot = new Array[Long](n)
-    java.util.Arrays.fill(minOfRoot, Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      val r = find(i)
-      if (nodeIds(i) < minOfRoot(r)) minOfRoot(r) = nodeIds(i)
-      i += 1
-    }
-    val rows = new Array[(Long, Long)](n)
-    i = 0
-    while (i < n) { rows(i) = (nodeIds(i), minOfRoot(find(i))); i += 1 }
-    spark.createDataset(rows.toSeq).toDF("id", "component")
+    // every node labelled with its root's minimum member id (the
+    // distributed contract)
+    spark.createDataset((0 until n).map(j => (nodeIds(j), minId(find(j)))))
+      .toDF("id", "component")
   }
 
   /** large-star: connect every strictly-larger neighbor of u to

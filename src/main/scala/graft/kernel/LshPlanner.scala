@@ -24,12 +24,6 @@ object LshPlanner {
   def collisionProb(s: Double, b: Int, r: Int): Double =
     1.0 - math.pow(1.0 - math.pow(s, r), b)
 
-  /** The similarity at which P(collide) = 0.5 exactly — the S-curve
-    * midpoint, (1 − 2^(−1/b))^(1/r) (the textbook (1/b)^(1/r) is the
-    * steepest-slope approximation of the same point). */
-  def curveMidpoint(b: Int, r: Int): Double =
-    math.pow(1.0 - math.pow(0.5, 1.0 / b), 1.0 / r)
-
   final case class Plan(bands: Int, rows: Int, fpArea: Double, fnArea: Double) {
     def cost(fpWeight: Double, fnWeight: Double): Double =
       fpWeight * fpArea + fnWeight * fnArea

@@ -64,18 +64,15 @@ object DedupOps {
       .withColumn("orig_id", expr("cast(substring(url, 4) as long)"))
       .cache()
     val idMap = sigs0.select("doc_id", "orig_id")
-    val graph = pipe.pairGraph(sigs0.drop("orig_id"))
-    val out = graph.pairs
+    val out = pipe.pairGraph(sigs0.drop("orig_id")).pairs
       .join(idMap.withColumnRenamed("doc_id", "src").withColumnRenamed("orig_id", "ida"), "src")
       .join(idMap.withColumnRenamed("doc_id", "dst").withColumnRenamed("orig_id", "idb"), "dst")
       .select(least(col("ida"), col("idb")).as("doc_id_a"),
         greatest(col("ida"), col("idb")).as("doc_id_b"), col("score"))
       .distinct()
-      // eager cut-over: pairs are small; dropping the signature cache and
-      // the producer's rep checkpoint NOW avoids pinning them per call for
-      // the session lifetime
+      // eager cut-over: pairs are small; dropping the signature cache NOW
+      // avoids pinning it per call for the session lifetime
       .localCheckpoint(true)
-    graph.release()
     sigs0.unpersist()
     out
   }
@@ -97,12 +94,16 @@ object DedupOps {
     * Search"; Chaudhuri et al. prefix filtering): each doc's distinct
     * string shingles are put in the global canonical order (ascending
     * document frequency, then gram), and only the PREFIX — the rarest
-    * p(n) = n − ⌈t·n/(1+t)⌉ + 1 shingles — generates candidate postings.
+    * p(n) = n − ⌈t·n⌉ + 1 shingles — generates candidate postings (the
+    * AllPairs/PPJoin probing prefix).
     *
-    * Soundness of p(n): J(A,B) ≥ t ⇒ |A∩B| ≥ t/(1+t)·(|A|+|B|); each
-    * doc's suffix holds ⌈t·n/(1+t)⌉ − 1 elements, so the two suffixes
-    * together hold STRICTLY fewer than t/(1+t)·(n_a+n_b) ≤ |A∩B| common
-    * elements — at least one shared shingle lies in BOTH prefixes.
+    * Soundness of p(n): J(A,B) ≥ t ⇒ |A∩B| ≥ t·|A∪B| ≥ t·max(|A|,|B|), so
+    * |A∩B| ≥ ⌈t·|A|⌉ and ≥ ⌈t·|B|⌉. Take the first shared shingle w in the
+    * canonical order: every shared shingle sorts at or after w, so if w
+    * lay in A's suffix, all |A∩B| shared shingles would fit in that suffix
+    * of ⌈t·|A|⌉ − 1 elements — impossible; likewise for B. So w lies in
+    * BOTH prefixes. (A 1e-9 slack under the ceiling keeps double rounding
+    * from ever shortening a prefix.)
     * Candidates are then verified EXACTLY on the full shingle arrays
     * (array_intersect), so the output equals the naive all-postings join
     * — but the quadratic collision volume collapses to rare-shingle
@@ -117,7 +118,11 @@ object DedupOps {
     * arrays. Residual by design: a qualifying pair whose every
     * prefix-shared shingle is capped is not discovered — such overlap is
     * corpus-wide boilerplate, and scoring it would need the quadratic
-    * join the cap exists to prevent.
+    * join the cap exists to prevent. The prefix length does not change
+    * this residual: capped shingles (df > maxPostings) sort after every
+    * uncapped one, so when the first shared shingle w is capped, every
+    * shared shingle is capped and no prefix of any length finds the pair;
+    * when w is uncapped, it lies in both prefixes and the pair is found.
     */
   def ngramJaccardPairs(spark: SparkSession, docs: DataFrame,
       k: Int = 3, threshold: Double = 0.7, maxPostings: Int = 1000): DataFrame =
@@ -157,7 +162,7 @@ object DedupOps {
     val hashed = hashInjectiveOnVocab(dfTab)
     val prefixPostings = ordered.select(col("doc_id"), col("set_size"),
         posexplode(expr(
-          s"slice(o, 1, set_size - CAST(CEIL(set_size * $threshold / (1 + $threshold)) AS INT) + 1)"
+          s"slice(o, 1, set_size - CAST(CEIL(set_size * $threshold - 1e-9) AS INT) + 1)"
         )).as(Seq("pos", "x")))
       // stop-shingle cap: boilerplate grams never generate candidates
       .where(col("x.df") <= maxPostings)

@@ -46,6 +46,11 @@ import graft.ledger.Ledger
   *    per sorted group and counted per (a, b). The table fuses into the
   *    first action that consumes it.
   *  - Verification joins pick broadcast vs sort-merge via Catalyst/AQE stats.
+  *  - From the signature cache to cluster ids, `run()` without a ledger
+  *    plans ONE action for the producer and CC: both channels in one plan
+  *    (no rep checkpoint), each banded doc exploded once (`bandsOf`), and
+  *    CC collecting its edges once with a per-partition bound
+  *    (`ConnectedComponents.run`).
   */
 final case class PipelineOptions(
     maxBandGroupSize: Int = 500,
@@ -364,28 +369,6 @@ final class DedupPipeline(
     bandsUdf(sig)
   }
 
-  /** SimHash banding: chunk-pair tables DERIVED from the configured Hamming
-    * radius, so the structural guarantee always matches the verify gate:
-    * blocks = simHashMaxHamming + 2 equal-ish chunks, one table per
-    * C(blocks, 2) chunk pair — ≤ maxHamming flips leave ≥ 2 chunks intact,
-    * hence some intact pair (the same derivation `phashDupPairs` uses).
-    * At the default radius 2 that is C(4,2)=6 tables of paired 16-bit
-    * chunks: single-chunk keys collide randomly at ~n²/2^17 pairs (measured
-    * as millions of junk candidates at 300k docs), chunk PAIRS at ~n²/2^33.
-    * Raising the radius buys guarantee at the price of key entropy
-    * (radius 3 → 5 blocks → ~25.6-bit keys), which the stop-band cap then
-    * bounds — see the PipelineOptions note.
-    */
-  def simhashBandStage(repSigs: DataFrame): DataFrame = {
-    val blocks = opts.simHashMaxHamming + 2
-    val combosUdf = udf((v: Long) => SimHash.chunkCombos(v, blocks, 2))
-    repSigs.select(col("doc_id"),
-        posexplode(combosUdf(col("simhash"))).as(Seq("band_id", "band_hash")))
-      .select(col("doc_id"),
-        (col("band_id") + lit(100)).as("band_id"), // disjoint id space vs minhash bands
-        col("band_hash"))
-  }
-
   /** THE rep-only band table recipe — the single definition of what the
     * persisted/probed band table contains: one banded signature per exact
     * group (the min-doc_id representative, V7 exact-implies-match pruning),
@@ -408,11 +391,35 @@ final class DedupPipeline(
       .join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
       .unionByName(hashable.where(!col("has_exact")))
 
-  /** Minhash band postings of `sigs`, plus the simhash chunk tables when
-    * that channel is on: (doc_id, band_id, band_hash). */
+  /** Band postings of `sigs`: (doc_id, band_id, band_hash), the MinHash
+    * bands as band_id 0…n−1 plus, when that channel is on, the SimHash
+    * chunk-pair tables as band_id 100+ (a disjoint id space). One projection
+    * computes both hash arrays and one `posexplode` emits them, so a banded
+    * doc is read once.
+    *
+    * SimHash banding: chunk-pair tables DERIVED from the configured Hamming
+    * radius, so the structural guarantee always matches the verify gate:
+    * blocks = simHashMaxHamming + 2 equal-ish chunks, one table per
+    * C(blocks, 2) chunk pair — ≤ maxHamming flips leave ≥ 2 chunks intact,
+    * hence some intact pair (the same derivation `phashDupPairs` uses).
+    * At the default radius 2 that is C(4,2)=6 tables of paired 16-bit
+    * chunks: single-chunk keys collide randomly at ~n²/2^17 pairs (measured
+    * as millions of junk candidates at 300k docs), chunk PAIRS at ~n²/2^33.
+    * Raising the radius buys guarantee at the price of key entropy
+    * (radius 3 → 5 blocks → ~25.6-bit keys), which the stop-band cap then
+    * bounds — see the PipelineOptions note.
+    */
   private[graft] def bandsOf(sigs: DataFrame): DataFrame = {
-    val mh = bandStage(sigs)
-    if (opts.simHashChannel) mh.unionByName(simhashBandStage(sigs)) else mh
+    val blocks = opts.simHashMaxHamming + 2
+    val combos = udf((v: Long) => SimHash.chunkCombos(v, blocks, 2))
+    val hashes =
+      if (opts.simHashChannel) concat(bandHashes(col("sig")), combos(col("simhash")))
+      else bandHashes(col("sig"))
+    val nMinhash = cfg.numBands
+    sigs.select(col("doc_id"), posexplode(hashes).as(Seq("pos", "band_hash")))
+      .select(col("doc_id"),
+        when(col("pos") < nMinhash, col("pos")).otherwise(col("pos") - nMinhash + 100)
+          .as("band_id"), col("band_hash"))
   }
 
   // ---- candidate generation (the load-bearing shuffle) ----------------
@@ -487,10 +494,11 @@ final class DedupPipeline(
   /** What one producer call yields: the exact channel's edges (src, dst)
     * and the LSH channel's verified pairs (a, b, score, hamming, n_bands,
     * jaccard — the stored schema of the "verified" ledger stage; jaccard is
-    * null unless the caller passed text). Both tables are lazy. The
+    * null unless the caller passed text). Both tables are lazy. A staged
     * producer's one ephemeral checkpoint, the shared rep table, stays
     * pinned until `release()`, which a caller invokes once every consumer
-    * of both tables has materialized.
+    * of both tables has materialized; an unstaged producer holds none, and
+    * `release()` is a no-op.
     */
   private[graft] final class PairGraph(val exactEdges: DataFrame, val verified: DataFrame,
       repCheckpoint: Option[DataFrame]) {
@@ -516,11 +524,20 @@ final class DedupPipeline(
     *
     *  - The exact channel groups ALL has_exact docs, including the short
     *    non-minhashable gap, so byte-identical short docs still dedup.
-    *  - The rep table feeds two separately-materialized jobs (bands →
-    *    candidates, and the exact edges' consumer). A LAZY localCheckpoint
-    *    lets the first consumer materialize it once and the second reuse
-    *    the stored blocks instead of re-running the 128-bit groupBy; no
-    *    extra job, since eager=false rides the first consumer's action.
+    *  - The rep table feeds the exact edges and the band table. Unstaged
+    *    (`run()` without a ledger, `dupPairs`, `dupPairsFromSigs`,
+    *    `minhashPairs`) both channels are consumed in ONE plan, so the rep
+    *    table is not checkpointed. Each channel then plans its own narrow
+    *    rep aggregate (doc_id and the two hashes of the has_exact rows):
+    *    AQE does not reuse an exchange that sits above a cached-table stage
+    *    (without AQE the two are one `ReusedExchange`). The benchmark got
+    *    faster with the second map stage than with the checkpoint's extra
+    *    job and stored blocks (BENCH.md, round 8).
+    *  - Staged, the ledger writes `exact_edges` and `bands` in separate
+    *    actions, so the rep table is `localCheckpoint`ed and the second
+    *    write reuses its blocks (`release()` drops them). That checkpoint
+    *    is "lazy" in name only: under AQE, `localCheckpoint(eager = false)`
+    *    still runs the rep exchange as a job when it is called.
     *  - `stages` wraps each step in its ledger stage (names, descriptors
     *    and stored schemas are the resume contract) and co-locates the
     *    persisted band table by band key (`TableStore.bandLayout`, the
@@ -531,7 +548,9 @@ final class DedupPipeline(
     */
   private[graft] def pairGraph(sigs0: DataFrame, stages: Option[Ledger] = None,
       text: Option[DataFrame] = None): PairGraph = {
-    val reps = exactGroups(sigs0)._1.localCheckpoint(eager = false)
+    val reps0 = exactGroups(sigs0)._1
+    val repCheckpoint = stages.map(_ => reps0.localCheckpoint(eager = false))
+    val reps = repCheckpoint.getOrElse(reps0)
     val exactEdges = stage(stages, "exact_edges", "", Seq("signatures")) {
       exactGroups(sigs0, Some(reps))._2
     }
@@ -542,7 +561,7 @@ final class DedupPipeline(
       if (stages.isEmpty) all else graft.storage.TableStore.bandLayout(all)
     }
     new PairGraph(exactEdges,
-      pairTail(bandTable, sigs0.where(col("hashable")), stages, text, identity), Some(reps))
+      pairTail(bandTable, sigs0.where(col("hashable")), stages, text, identity), repCheckpoint)
   }
 
   /** The producer's candidate → verify tail over a band table: the
@@ -594,7 +613,7 @@ final class DedupPipeline(
     val components = stage(ledger, "components", "", Seq("verified")) {
       ConnectedComponents.run(edges)
     }
-    // CC collected or checkpointed its edges: both channels materialized
+    // CC collected its edges: both channels materialized
     graph.release()
     // every doc: component if present, else itself
     sigs0.select("url", "doc_id")
@@ -622,11 +641,8 @@ final class DedupPipeline(
     val docs = extractStage(input, fromHtml)
     val sigs0 = signatureStage(docs).toDF().cache()
     // eager cut-over: verified pairs are cap-bounded and small; release the
-    // signature cache and the producer's rep checkpoint instead of pinning
-    // them per call
-    val graph = pairGraph(sigs0, text = jaccardText(docs))
-    val out = graph.pairs.localCheckpoint(true)
-    graph.release()
+    // signature cache instead of pinning it per call
+    val out = pairGraph(sigs0, text = jaccardText(docs)).pairs.localCheckpoint(true)
     sigs0.unpersist()
     out
   }

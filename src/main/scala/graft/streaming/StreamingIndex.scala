@@ -23,8 +23,7 @@ import graft.pipeline.{DedupPipeline, DocSig, PipelineOptions}
   * sink read back as a stream), so nothing re-signs and every output
   * references the same elected representative.
   *
-  * Also provides the streaming paragraph dedup and the event-time windowed
-  * aggregation shape (watermark + tumbling window) over an event stream.
+  * Also provides the streaming paragraph dedup.
   */
 object StreamingIndex {
 
@@ -110,9 +109,8 @@ object StreamingIndex {
     * ALREADY-SIGNED stream (the `sigVerdictStream` rows, pre-filtered to
     * first-seen by the caller) — append-mode sink rows for the band table,
     * built by the batch band recipe (`DedupPipeline.bandsOf`), including the
-    * simhash chunk tables when that channel is on (same disjoint band_id
-    * space as the batch `simhashBandStage`, so the appended rows probe
-    * identically). Stateless, so it runs per micro-batch; a duplicate burst
+    * simhash chunk tables when that channel is on (band_id 100+), so the
+    * appended rows probe identically. Stateless, so it runs per micro-batch; a duplicate burst
     * appends one doc's postings, the batch rep-only table.
     */
   def bandPostingsFromSignedStream(spark: SparkSession, sigs: DataFrame,
@@ -331,16 +329,4 @@ object StreamingIndex {
         })
       .toDF("doc_id", "para_idx", "para")
   }
-
-  /** Event-time tumbling-window aggregation with watermark over a stream of
-    * (ts: timestamp, event_type: string, value: double).
-    */
-  def eventWindowStream(events: DataFrame,
-      windowDur: String = "1 hour", watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowDur), col("event_type"))
-      .agg(count(lit(1)).as("cnt"), max("value").as("max_value"))
-      .select(col("window.start").as("w_start"), col("event_type"),
-        col("cnt"), col("max_value"))
 }

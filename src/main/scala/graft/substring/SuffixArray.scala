@@ -1,47 +1,67 @@
 package graft.substring
 
-/** Suffix array (prefix-doubling, O(n log² n)) + Kasai LCP over int
-  * sequences — used to find the longest common token run between two
-  * documents exactly (the per-pair verification of the substring stage).
-  * Public textbook algorithms.
+/** Suffix array (Manber–Myers prefix doubling, O(n log n)) + Kasai LCP
+  * over int sequences — used to find the longest common token run between
+  * two documents exactly (the per-pair verification of the substring
+  * stage). Public textbook algorithms.
   */
 object SuffixArray {
 
-  /** Suffix array of `s` (values may be any ints; ranks are computed). */
+  /** Suffix array of `s` (values may be any ints; ranks are computed).
+    * Each doubling round orders suffixes by the pair (rank(j), rank(j+k))
+    * with two stable counting sorts — second key, then first — over
+    * primitive int arrays, and re-ranks; it stops once every rank is
+    * distinct. */
   def build(s: Array[Int]): Array[Int] = {
     val n = s.length
-    if (n == 0) return Array.empty
-    var sa = Array.range(0, n)
-    var rank = new Array[Int](n)
-    // initial ranks from element values
-    val sorted = s.distinct.sorted
-    val rankOf = sorted.zipWithIndex.toMap
+    // initial ranks: dense ranks of the values
+    val uniq = s.clone()
+    java.util.Arrays.sort(uniq)
+    var m = 0
     var i = 0
-    while (i < n) { rank(i) = rankOf(s(i)); i += 1 }
-    var tmp = new Array[Int](n)
+    while (i < n) { if (m == 0 || uniq(i) != uniq(m - 1)) { uniq(m) = uniq(i); m += 1 }; i += 1 }
+    var rank = new Array[Int](n)
+    i = 0
+    while (i < n) { rank(i) = java.util.Arrays.binarySearch(uniq, 0, m, s(i)); i += 1 }
+    var next = new Array[Int](n)
+    val sa = Array.range(0, n)
+    val bySecond = new Array[Int](n)
+    val counts = new Array[Int](n + 2)
+    var classes = m
     var k = 1
-    while (k < n) {
-      val ord = new Ordering[Int] {
-        def compare(a: Int, b: Int): Int = {
-          if (rank(a) != rank(b)) return rank(a) - rank(b)
-          val ra = if (a + k < n) rank(a + k) else -1
-          val rb = if (b + k < n) rank(b + k) else -1
-          ra - rb
-        }
-      }
-      sa = sa.sortWith((a, b) => ord.compare(a, b) < 0)
-      tmp(sa(0)) = 0
+    while (n > 0 && (classes < n || k == 1)) {
+      countingSort(sa, bySecond, rank, k, classes, counts)
+      countingSort(bySecond, sa, rank, 0, classes, counts)
+      val r = rank
+      def key(j: Int, shift: Int): Int = if (j + shift < n) r(j + shift) + 1 else 0
+      next(sa(0)) = 0
       i = 1
       while (i < n) {
-        tmp(sa(i)) = tmp(sa(i - 1)) + (if (ord.compare(sa(i - 1), sa(i)) < 0) 1 else 0)
+        val a = sa(i - 1); val b = sa(i)
+        next(b) = next(a) + (if (r(a) != r(b) || key(a, k) != key(b, k)) 1 else 0)
         i += 1
       }
-      // swap references — copying tmp into rank would alias the two arrays
-      val t = rank; rank = tmp; tmp = t
-      if (rank(sa(n - 1)) == n - 1) return sa
+      classes = next(sa(n - 1)) + 1
+      rank = next; next = r
       k <<= 1
     }
     sa
+  }
+
+  /** Stable counting sort of the suffixes in `in` into `out`, keyed by
+    * rank(j + shift) + 1, or 0 when j + shift is past the end (ranks are
+    * below `classes`). */
+  private def countingSort(in: Array[Int], out: Array[Int], rank: Array[Int], shift: Int,
+      classes: Int, counts: Array[Int]): Unit = {
+    val n = in.length
+    def key(j: Int): Int = if (j + shift < n) rank(j + shift) + 1 else 0
+    java.util.Arrays.fill(counts, 0, classes + 2, 0)
+    var i = 0
+    while (i < n) { counts(key(in(i)) + 1) += 1; i += 1 }
+    i = 1
+    while (i <= classes + 1) { counts(i) += counts(i - 1); i += 1 }
+    i = 0
+    while (i < n) { val j = in(i); val c = key(j); out(counts(c)) = j; counts(c) += 1; i += 1 }
   }
 
   /** Kasai LCP: lcp(i) = common-prefix length of sa(i) and sa(i-1). */
@@ -65,6 +85,16 @@ object SuffixArray {
     out
   }
 
+  /** a#b: `a` and `b` around one separator, Int.MinValue + 1, which cannot
+    * occur in token hashes (they are masked to 31 bits). */
+  private def separated(a: Array[Int], b: Array[Int]): Array[Int] = {
+    val s = new Array[Int](a.length + 1 + b.length)
+    System.arraycopy(a, 0, s, 0, a.length)
+    s(a.length) = Int.MinValue + 1
+    System.arraycopy(b, 0, s, a.length + 1, b.length)
+    s
+  }
+
   /** Matching statistics of `b` against `a` (Chang–Lawler): ms(i) = length
     * of the longest prefix of b's suffix starting at i that occurs ANYWHERE
     * in `a`. Computed from the generalized suffix array of a#b: for each
@@ -77,11 +107,7 @@ object SuffixArray {
   def matchingStatistics(a: Array[Int], b: Array[Int]): Array[Int] = {
     val ms = new Array[Int](b.length)
     if (a.isEmpty || b.isEmpty) return ms
-    val sep = Int.MinValue + 1
-    val s = new Array[Int](a.length + 1 + b.length)
-    System.arraycopy(a, 0, s, 0, a.length)
-    s(a.length) = sep
-    System.arraycopy(b, 0, s, a.length + 1, b.length)
+    val s = separated(a, b)
     val sa = build(s)
     val l = lcp(s, sa)
     val n = s.length
@@ -126,11 +152,7 @@ object SuffixArray {
     */
   def longestCommonRun(a: Array[Int], b: Array[Int]): (Int, Int, Int) = {
     if (a.isEmpty || b.isEmpty) return (0, 0, 0)
-    val sep = Int.MinValue + 1 // cannot occur in token hashes (we mask to 31 bits)
-    val s = new Array[Int](a.length + 1 + b.length)
-    System.arraycopy(a, 0, s, 0, a.length)
-    s(a.length) = sep
-    System.arraycopy(b, 0, s, a.length + 1, b.length)
+    val s = separated(a, b)
     val sa = build(s)
     val l = lcp(s, sa)
     var best = 0

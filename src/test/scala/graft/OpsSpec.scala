@@ -196,6 +196,40 @@ class DedupOpsSpec extends SparkTestBase {
       assert(pre == plain, s"cap=$cap: prefix $pre vs plain $plain")
     }
   }
+
+  test("prefix-filtered n-gram Jaccard equals the plain join at t = 0.7 and t = 0.9") {
+    // near-dup families with 0–6 token edits: pairs straddle both thresholds
+    val r = new java.util.Random(23)
+    def words(n: Int) = (0 until n).map(_ => (0 until 6).map(_ => ('a' + r.nextInt(26)).toChar).mkString)
+    val vocab = words(300)
+    val boiler = "shared boilerplate words repeat across many documents here"
+    val families = (0 until 12).flatMap { f =>
+      val base = Array.fill(40)(vocab(r.nextInt(vocab.size)))
+      (0 until 5).map { v =>
+        val t = base.clone()
+        for (_ <- 0 until r.nextInt(7)) t(r.nextInt(t.length)) = vocab(r.nextInt(vocab.size))
+        ((f * 10 + v).toLong, (if (f % 3 == 0) s"$boiler " else "") + t.mkString(" "))
+      }
+    }
+    // containment pairs at exactly J = t (10 grams vs their last 7, and vs
+    // their last 9): the bigger doc's own grams (df 1) sort first, so the
+    // first shared gram sits on the last slot of its sound prefix
+    val (edge7, edge9) = (words(12), words(12))
+    val boundary = Seq((900L, edge7.mkString(" ")), (901L, edge7.drop(3).mkString(" ")),
+      (902L, edge9.mkString(" ")), (903L, edge9.drop(1).mkString(" ")))
+    val docs = (families ++ boundary).toDF("doc_id", "text")
+    // cap 6 drops the boilerplate grams (df 20) and keeps family grams (df ≤ 5)
+    for (t <- Seq(0.7, 0.9); cap <- Seq(6, 1000)) {
+      val pre = DedupOps.ngramJaccardPairs(spark, docs, threshold = t, maxPostings = cap)
+        .as[(Long, Long, Double)].collect().toSet
+      val plain = JaccardReference.ngramJaccardPairsPlain(spark, docs, threshold = t,
+        maxPostings = cap).as[(Long, Long, Double)].collect().toSet
+      assert(plain.nonEmpty, s"t=$t cap=$cap: the corpus must have qualifying pairs")
+      assert(pre == plain, s"t=$t cap=$cap: prefix $pre vs plain $plain")
+      assert(pre.map(p => (p._1, p._2)).filter(_._1 >= 900L) ==
+        (if (t == 0.7) Set((900L, 901L), (902L, 903L)) else Set((902L, 903L))))
+    }
+  }
 }
 
 class AnnOpsSpec extends SparkTestBase {
@@ -499,6 +533,17 @@ class ReportOpsSpec extends SparkTestBase {
 class StreamingSpec extends SparkTestBase {
   import spark.implicits._
   import graft.pipeline.DocSig
+
+  /** Event-time tumbling-window aggregation with watermark over a stream of
+    * (ts: timestamp, event_type: string, value: double). */
+  private def eventWindowStream(events: org.apache.spark.sql.DataFrame,
+      windowDur: String, watermark: String): org.apache.spark.sql.DataFrame =
+    events
+      .withWatermark("ts", watermark)
+      .groupBy(window(col("ts"), windowDur), col("event_type"))
+      .agg(count(lit(1)).as("cnt"), max("value").as("max_value"))
+      .select(col("window.start").as("w_start"), col("event_type"),
+        col("cnt"), col("max_value"))
 
   /** A doc signed by the batch kernel — the row shape the cascade tails
     * read from the head's sink. */
@@ -957,7 +1002,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
     val stream = mem.toDF().toDF("ts", "event_type", "value")
-    val agg = graft.streaming.StreamingIndex.eventWindowStream(stream, "1 hour", "2 hours")
+    val agg = eventWindowStream(stream, "1 hour", "2 hours")
     val q = agg.writeStream.format("memory").queryName("ev_win")
       .outputMode("complete").start()
     def ts(h: Int, m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")

@@ -5,6 +5,7 @@ import graft.corpus.CorpusGen
 import graft.pipeline.{DedupPipeline, PipelineOptions}
 import graft.cluster.ConnectedComponents
 import graft.kernel.TextNorm
+import org.apache.spark.graftglue.JobRecorder
 
 class CorpusSpec extends SparkTestBase {
   test("extraction is byte-identical to the source text for every url") {
@@ -66,6 +67,47 @@ class ConnectedComponentsSpec extends SparkTestBase {
     val comp = ConnectedComponents.run(edges, driverThreshold = 0).collect()
     assert(comp.forall(_.getLong(1) == 0L))
     assert(comp.length == n + 1)
+  }
+
+  test("CC's driver path takes its edges in one job: no count, no cache") {
+    // a shuffle producer, as in run(): AQE runs its map stage as its own job
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L), (20L, 20L)).toDF("src", "dst")
+      .repartition(3).groupBy("src", "dst").count()
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val (comp, rec) = JobRecorder.during(spark.sparkContext)(ConnectedComponents.run(edges))
+    assert(ConnectedComponents.lastRunIterations == 0, "small graph takes the driver path")
+    val names = rec.jobStages.flatten
+    assert(!names.exists(n => n.startsWith("count at") || n.contains("cache")), names)
+    assert(rec.jobStages.count(_.exists(_.startsWith("runJob at ConnectedComponents"))) == 1,
+      rec.jobStages)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet -- before == Set.empty,
+      "the driver path pins nothing")
+    assert(comp.as[(Long, Long)].collect().sorted.toSeq ==
+      Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)))
+  }
+
+  test("over-cap edges take the star loop without recomputing the producer") {
+    val rnd = new scala.util.Random(5)
+    val es = (0 until 500).map(_ => (rnd.nextInt(400).toLong, rnd.nextInt(400).toLong))
+    // counts the source rows the producer's map side reads
+    val reads = spark.sparkContext.longAccumulator("producer-reads")
+    val tap = udf((x: Long) => { reads.add(1); x }).asNondeterministic()
+    val produced = es.toDF("src", "dst").repartition(4)
+      .select(tap(col("src")).as("src"), col("dst"))
+      .groupBy("src", "dst").count().select("src", "dst")
+    val viaDriver = ConnectedComponents.run(produced).as[(Long, Long)].collect().sorted.toSeq
+    reads.reset()
+    val (viaLoop, rec) = JobRecorder.during(spark.sparkContext) {
+      // 0 < threshold < edge count: some partition overflows its bound
+      val c = ConnectedComponents.run(produced, driverThreshold = 50)
+      (c.as[(Long, Long)].collect().sorted.toSeq, ConnectedComponents.lastRunIterations)
+    }
+    assert(viaLoop._2 > 0, "the bounded collect must overflow into the star loop")
+    assert(viaLoop._1 == viaDriver)
+    val deps = rec.submittedShuffleDeps
+    assert(deps.nonEmpty && deps.distinct.size == deps.size,
+      s"a shuffle map stage ran twice: $deps")
+    assert(reads.value == es.size, "the producer's map side ran more than once")
   }
 
   test("CC is idempotent: rerunning on star edges returns the same labels") {
@@ -236,6 +278,25 @@ class DedupPipelineSpec extends SparkTestBase {
       val got = DedupPipeline.pairsFromBands(spark, bands, cap, bandMatchesRequired = 1)
         .select("a", "b").as[(Long, Long)].collect().toSet
       assert(got == Set((1L, 2L)), s"parts=$parts: $got")
+    }
+  }
+
+  test("bandsOf is bandStage ∪ the simhash chunk tables, as a row set") {
+    val corpus = CorpusGen.generate(spark, sf = 0.002, seed = 5L)
+    for (opts <- Seq(PipelineOptions(), PipelineOptions(simHashChannel = false),
+        PipelineOptions(simHashMaxHamming = 3))) {
+      val pipe = new DedupPipeline(spark, graft.kernel.GraftConfig.default, opts)
+      val sigs = pipe.signatureStage(pipe.extractStage(corpus, fromHtml = true)).toDF()
+        .where(col("hashable")).localCheckpoint(eager = true)
+      val got = pipe.bandsOf(sigs)
+      val ref = BandReference.bands(pipe, opts, sigs)
+      assert(got.schema.map(f => (f.name, f.dataType)) == ref.schema.map(f => (f.name, f.dataType)))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("doc_id", "band_id", "band_hash").collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+      val g = rows(got)
+      assert(g.nonEmpty && g == rows(ref), s"bandsOf differs under $opts")
+      DedupPipeline.releaseCheckpoint(sigs)
     }
   }
 

@@ -64,6 +64,12 @@ class MatchingStatisticsSpec extends AnyFunSuite {
 
 class LshPlannerSpec extends AnyFunSuite {
 
+  /** The similarity at which P(collide) = 0.5 exactly — the S-curve
+    * midpoint, (1 − 2^(−1/b))^(1/r) (the textbook (1/b)^(1/r) is the
+    * steepest-slope approximation of the same point). */
+  private def curveMidpoint(b: Int, r: Int): Double =
+    math.pow(1.0 - math.pow(0.5, 1.0 / b), 1.0 / r)
+
   test("collision probability S-curve basics") {
     assert(LshPlanner.collisionProb(0.0, 20, 4) == 0.0)
     assert(math.abs(LshPlanner.collisionProb(1.0, 20, 4) - 1.0) < 1e-12)
@@ -71,7 +77,7 @@ class LshPlannerSpec extends AnyFunSuite {
     val hi = LshPlanner.collisionProb(0.8, 20, 4)
     assert(lo < hi)
     // midpoint: P(midpoint) = 0.5 by construction
-    val mid = LshPlanner.curveMidpoint(20, 4)
+    val mid = curveMidpoint(20, 4)
     assert(math.abs(LshPlanner.collisionProb(mid, 20, 4) - 0.5) < 1e-9)
   }
 
@@ -99,7 +105,7 @@ class LshPlannerSpec extends AnyFunSuite {
     assert(strict.rows > loose.rows)
     // the chosen curve's midpoint lands near the target threshold
     for ((t, p) <- Seq(0.3 -> loose, 0.9 -> strict))
-      assert(math.abs(LshPlanner.curveMidpoint(p.bands, p.rows) - t) < 0.2)
+      assert(math.abs(curveMidpoint(p.bands, p.rows) - t) < 0.2)
   }
 
   test("weights steer the trade: FP-averse plan has smaller FP area") {

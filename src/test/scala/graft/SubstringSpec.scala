@@ -13,6 +13,23 @@ class SuffixArraySpec extends AnyFunSuite {
     assert(l.toSeq == Seq(0, 1, 3, 0, 0, 2))
   }
 
+  test("counting-sort suffix array equals the comparison-sort reference") {
+    val r = new java.util.Random(17)
+    val sep = Int.MinValue + 1
+    def random(n: Int) = Array.fill(n)(r.nextInt())
+    def lowAlphabet(n: Int) = Array.fill(n)(r.nextInt(1 + r.nextInt(3)))
+    // a#b as the substring stage builds it: token hashes around one separator
+    def withSeparator(n: Int) = {
+      val a = Array.fill(n / 2)(r.nextInt(4) & 0x7fffffff)
+      val b = Array.fill(n - n / 2)(r.nextInt(4) & 0x7fffffff)
+      (a :+ sep) ++ b
+    }
+    for (gen <- Seq(random _, lowAlphabet _, withSeparator _); _ <- 0 until 1000) {
+      val s = gen(r.nextInt(200))
+      assert(SuffixArray.build(s).toSeq == SuffixArrayReference.build(s).toSeq, s.toSeq)
+    }
+  }
+
   test("longest common run finds shared span and offsets") {
     val a = Array(1, 2, 3, 4, 5, 6, 7, 8)
     val b = Array(9, 9, 4, 5, 6, 7, 9)
