@@ -377,29 +377,31 @@ object DedupJob {
     // M7 sweep: re-sent urls are already indexed — only genuinely new rows sign
     val batch = pipe.extractStage(spark.read.parquet(a.incremental.get), a.fromHtml)
     val fresh = graft.ops.MaintenanceOps.newDocs(batch, oldSigs)
-    val newSigs = pipe.signatureStage(fresh).toDF().cache()
-    // materialize the cache up front; a cache-partition loss later recomputes
-    // against the same COMMITTED state (this batch's deltas are not yet
-    // visible), so recomputation is identical
-    val freshCount = newSigs.count()
-    // ONE probe plan serves both the pair output and the state deltas
-    val parts = pipe.probeParts(oldSigs, newSigs, oldBands)
-    parts.pairs.write.mode("overwrite").parquet(a.output)
-    val pairCount = spark.read.parquet(a.output).count()
+    val newSigs = pipe.signatureStage(fresh).toDF()
     val newlyCommitted = !committed.contains(batchId)
-    if (newlyCommitted) {
-      val store = graft.storage.TableStore.parquet
-      store.write(parts.newBands.select(bandColNames.map(col): _*),
-        s"$chk/inc_bands/$sv/batch=$batchId")
-      store.write(parts.replacedReps.select("doc_id"),
-        s"$chk/inc_replaced/$sv/batch=$batchId")
-      store.write(newSigs.select(sigColNames.map(col): _*),
-        s"$chk/inc_sigs/$sv/batch=$batchId")
-      // commit LAST: the deltas become visible atomically with this marker
-      fs.mkdirs(commitsPath)
-      fs.create(new org.apache.hadoop.fs.Path(commitsPath, batchId), true).close()
+    val (pairCount, freshCount) = DedupPipeline.withCached(newSigs) {
+      // fill the cache up front; a cache-partition loss later recomputes
+      // against the same COMMITTED state (this batch's deltas are not yet
+      // visible), so recomputation is identical
+      val freshCount = newSigs.count()
+      // ONE probe plan serves both the pair output and the state deltas
+      val parts = pipe.probeParts(oldSigs, newSigs, oldBands)
+      parts.pairs.write.mode("overwrite").parquet(a.output)
+      val pairCount = spark.read.parquet(a.output).count()
+      if (newlyCommitted) {
+        val store = graft.storage.TableStore.parquet
+        store.write(parts.newBands.select(bandColNames.map(col): _*),
+          s"$chk/inc_bands/$sv/batch=$batchId")
+        store.write(parts.replacedReps.select("doc_id"),
+          s"$chk/inc_replaced/$sv/batch=$batchId")
+        store.write(newSigs.select(sigColNames.map(col): _*),
+          s"$chk/inc_sigs/$sv/batch=$batchId")
+        // commit LAST: the deltas become visible atomically with this marker
+        fs.mkdirs(commitsPath)
+        fs.create(new org.apache.hadoop.fs.Path(commitsPath, batchId), true).close()
+      }
+      (pairCount, freshCount)
     }
-    newSigs.unpersist()
 
     // ---- delta compaction (the reference's pack-based band rebuild analog,
     // /root/reference/mcrit/storage/MongoDbStorage.py:1150+): once enough

@@ -69,7 +69,7 @@ final class Ledger(spark: SparkSession, root: String, configHash: String,
       // tables are append-only
       val runId = java.util.UUID.randomUUID().toString
       // TRUE per-partition lineage (north_rule): one row per output partition
-      // with its row count — cached so the summary below reuses the same scan
+      // with its row count — cached so the summary reuses the same scan
       val perPartition = out
         .withColumn("part_id", spark_partition_id())
         .groupBy("part_id").agg(count(lit(1)).as("rows"))
@@ -78,8 +78,6 @@ final class Ledger(spark: SparkSession, root: String, configHash: String,
         .withColumn("config_hash", lit(configHash))
         .withColumn("run_id", lit(runId))
         .withColumn("ts", current_timestamp())
-        .cache()
-      store.append(perPartition, s"$root/_lineage")
       val summary = perPartition
         .agg(
           sum("rows").as("rows"),
@@ -92,8 +90,10 @@ final class Ledger(spark: SparkSession, root: String, configHash: String,
         .withColumn("run_id", lit(runId))
         .withColumn("wall_ms", lit(wallMs))
         .withColumn("ts", current_timestamp())
-      store.append(summary, s"$root/_metrics")
-      perPartition.unpersist()
+      graft.pipeline.DedupPipeline.withCached(perPartition) {
+        store.append(perPartition, s"$root/_lineage")
+        store.append(summary, s"$root/_metrics")
+      }
     } catch { case scala.util.control.NonFatal(_) => () } // metrics are best-effort; fatal errors propagate
   }
 

@@ -62,7 +62,6 @@ object DedupOps {
     val sigs0 = pipe.signatureStage(pipe.extractStage(asCorpus(docs), fromHtml = false))
       .toDF()
       .withColumn("orig_id", expr("cast(substring(url, 4) as long)"))
-      .cache()
     val idMap = sigs0.select("doc_id", "orig_id")
     val out = pipe.pairGraph(sigs0.drop("orig_id")).pairs
       .join(idMap.withColumnRenamed("doc_id", "src").withColumnRenamed("orig_id", "ida"), "src")
@@ -70,11 +69,7 @@ object DedupOps {
       .select(least(col("ida"), col("idb")).as("doc_id_a"),
         greatest(col("ida"), col("idb")).as("doc_id_b"), col("score"))
       .distinct()
-      // eager cut-over: pairs are small; dropping the signature cache NOW
-      // avoids pinning it per call for the session lifetime
-      .localCheckpoint(true)
-    sigs0.unpersist()
-    out
+    DedupPipeline.withCached(sigs0)(out.localCheckpoint(true))
   }
 
   /** 64-bit SimHash per doc (k-gram shingles, Charikar bit-voting). */
@@ -128,14 +123,14 @@ object DedupOps {
       k: Int = 3, threshold: Double = 0.7, maxPostings: Int = 1000): DataFrame =
     ngramJaccardPairsFromSets(shingleSets(spark, docs, k), threshold, maxPostings)
 
-  private def ngramJaccardPairsFromSets(sets0: DataFrame,
+  private def ngramJaccardPairsFromSets(sets: DataFrame,
       threshold: Double, maxPostings: Int): DataFrame = {
-    // shingle the corpus ONCE: the posting explode feeds both the df table
-    // and the ordered-array build, and without the cache each branch re-ran
-    // the shingling UDF over the full corpus (the r7 executed-plan capture
-    // showed THREE scan+shingle passes per call: postings, the df table,
-    // and a full df-table recompute for the stop-cap join below)
-    val sets = sets0.cache()
+    // shingle the corpus ONCE (`sets` is cached below): the posting explode
+    // feeds both the df table and the ordered-array build, and without the
+    // cache each branch re-ran the shingling UDF over the full corpus (the
+    // r7 executed-plan capture showed THREE scan+shingle passes per call:
+    // postings, the df table, and a full df-table recompute for the
+    // stop-cap join below)
     val postings = sets.select(col("doc_id"), explode(col("shingles")).as("sh"))
     val dfTab = postings.groupBy("sh").agg(count(lit(1)).as("df"))
     // canonical order = (df asc, gram asc): global, deterministic, and it
@@ -148,64 +143,58 @@ object DedupOps {
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("df"), col("sh")))).as("o"))
       .withColumn("set_size", size(col("o")))
-      .cache()
-    // one scalar aggregate decides hashed-vs-string evaluation for BOTH the
-    // candidate join key and the verification arrays (see
-    // hashInjectiveOnVocab): under proven injectivity xxhash64(sh) equality
-    // ⟺ sh equality on this corpus' vocabulary, so the self-join below can
-    // exchange and compare 8-byte longs instead of ~20-byte strings —
-    // identical candidates, narrower shuffle (guide §2.3). (Running the
-    // check over the cached ordered arrays instead — prepaying the ordered
-    // build in the check's action — A/B'd as a wash: best-of-3 2.30 vs
-    // 2.32 s and 2.71 vs 2.55 s across two alternating rounds; kept the
-    // simpler df-table form.)
-    val hashed = hashInjectiveOnVocab(dfTab)
-    val prefixPostings = ordered.select(col("doc_id"), col("set_size"),
-        posexplode(expr(
-          s"slice(o, 1, set_size - CAST(CEIL(set_size * $threshold - 1e-9) AS INT) + 1)"
-        )).as(Seq("pos", "x")))
-      // stop-shingle cap: boilerplate grams never generate candidates
-      .where(col("x.df") <= maxPostings)
-      .select(col("doc_id"), col("set_size"), col("pos"),
-        (if (hashed) xxhash64(col("x.sh")) else col("x.sh")).as("sh"))
-    // length filter (exact-preserving): J ≥ t ⇒ |A∩B| ≥ t·max(n_a,n_b) and
-    // |A∩B| ≤ min(n_a,n_b) ⇒ min ≥ t·max — prune size-mismatched pairs
-    // inside the join, before the distinct. (On corpora with a dense
-    // shingle vocabulary — like the synthetic tables, where avg df ≈ 50 —
-    // the prefix filter alone prunes less than on power-law web text, and
-    // this second filter carries more of the load.)
-    //
-    // POSITIONAL filter (PPJoin, Xiao et al. "Efficient Similarity Joins
-    // for Near Duplicate Detection"): a shared prefix gram at 0-based
-    // positions (i, j) of the two canonically-ordered arrays bounds the
-    // achievable overlap by min(i,j) before it + 1 + min(remaining suffix
-    // lengths) after it. J ≥ t ⇒ |A∩B| ≥ t/(1+t)·(n_a+n_b), and for a
-    // QUALIFYING pair the bound holds at EVERY shared position pair, so
-    // every join row of a qualifying pair passes — dropping rows below the
-    // bound loses no true pair (verification below stays string-exact).
-    // The 1e-9 slack keeps double rounding from ever exceeding the exact
-    // rational threshold. Measured r7: candidate pairs 2.23M → the exact
-    // verify's input collapses, the dominant cost of this query.
-    val cand = prefixPostings.as("x").join(prefixPostings.as("y"),
-        col("x.sh") === col("y.sh") && col("x.doc_id") < col("y.doc_id") &&
-          col("x.set_size") * lit(threshold) <= col("y.set_size") &&
-          col("y.set_size") * lit(threshold) <= col("x.set_size") &&
-          (lit(1) + least(col("x.pos"), col("y.pos")) +
-            least(col("x.set_size") - col("x.pos") - 1,
-              col("y.set_size") - col("y.pos") - 1)).cast("double") >=
-            (col("x.set_size") + col("y.set_size")) * lit(threshold / (1 + threshold)) - lit(1e-9))
-      .select(col("x.doc_id").as("doc_id_a"), col("y.doc_id").as("doc_id_b"))
-      .distinct()
-    val out = verifyJaccard(cand, ordered.select(col("doc_id"),
-      expr("transform(o, x -> x.sh)").as("shingles"), col("set_size")), threshold,
-      hashed = hashed)
-    // eager cut-over so the cached per-doc ordered arrays can be dropped NOW
-    // (they would otherwise stay pinned for the session lifetime); the pair
-    // output is threshold-bounded and far smaller than the cache it frees
-    val result = out.localCheckpoint(true)
-    ordered.unpersist()
-    sets.unpersist()
-    result
+    DedupPipeline.withCached(sets, ordered) {
+      // one scalar aggregate decides hashed-vs-string evaluation for BOTH the
+      // candidate join key and the verification arrays (see
+      // hashInjectiveOnVocab): under proven injectivity xxhash64(sh) equality
+      // ⟺ sh equality on this corpus' vocabulary, so the self-join below can
+      // exchange and compare 8-byte longs instead of ~20-byte strings —
+      // identical candidates, narrower shuffle (guide §2.3). (Running the
+      // check over the cached ordered arrays instead — prepaying the ordered
+      // build in the check's action — A/B'd as a wash: best-of-3 2.30 vs
+      // 2.32 s and 2.71 vs 2.55 s across two alternating rounds; kept the
+      // simpler df-table form.)
+      val hashed = hashInjectiveOnVocab(dfTab)
+      val prefixPostings = ordered.select(col("doc_id"), col("set_size"),
+          posexplode(expr(
+            s"slice(o, 1, set_size - CAST(CEIL(set_size * $threshold - 1e-9) AS INT) + 1)"
+          )).as(Seq("pos", "x")))
+        // stop-shingle cap: boilerplate grams never generate candidates
+        .where(col("x.df") <= maxPostings)
+        .select(col("doc_id"), col("set_size"), col("pos"),
+          (if (hashed) xxhash64(col("x.sh")) else col("x.sh")).as("sh"))
+      // length filter (exact-preserving): J ≥ t ⇒ |A∩B| ≥ t·max(n_a,n_b) and
+      // |A∩B| ≤ min(n_a,n_b) ⇒ min ≥ t·max — prune size-mismatched pairs
+      // inside the join, before the distinct. (On corpora with a dense
+      // shingle vocabulary — like the synthetic tables, where avg df ≈ 50 —
+      // the prefix filter alone prunes less than on power-law web text, and
+      // this second filter carries more of the load.)
+      //
+      // POSITIONAL filter (PPJoin, Xiao et al. "Efficient Similarity Joins
+      // for Near Duplicate Detection"): a shared prefix gram at 0-based
+      // positions (i, j) of the two canonically-ordered arrays bounds the
+      // achievable overlap by min(i,j) before it + 1 + min(remaining suffix
+      // lengths) after it. J ≥ t ⇒ |A∩B| ≥ t/(1+t)·(n_a+n_b), and for a
+      // QUALIFYING pair the bound holds at EVERY shared position pair, so
+      // every join row of a qualifying pair passes — dropping rows below the
+      // bound loses no true pair (verification below stays string-exact).
+      // The 1e-9 slack keeps double rounding from ever exceeding the exact
+      // rational threshold. Measured r7: candidate pairs 2.23M → the exact
+      // verify's input collapses, the dominant cost of this query.
+      val cand = prefixPostings.as("x").join(prefixPostings.as("y"),
+          col("x.sh") === col("y.sh") && col("x.doc_id") < col("y.doc_id") &&
+            col("x.set_size") * lit(threshold) <= col("y.set_size") &&
+            col("y.set_size") * lit(threshold) <= col("x.set_size") &&
+            (lit(1) + least(col("x.pos"), col("y.pos")) +
+              least(col("x.set_size") - col("x.pos") - 1,
+                col("y.set_size") - col("y.pos") - 1)).cast("double") >=
+              (col("x.set_size") + col("y.set_size")) * lit(threshold / (1 + threshold)) - lit(1e-9))
+        .select(col("x.doc_id").as("doc_id_a"), col("y.doc_id").as("doc_id_b"))
+        .distinct()
+      verifyJaccard(cand, ordered.select(col("doc_id"),
+        expr("transform(o, x -> x.sh)").as("shingles"), col("set_size")), threshold,
+        hashed = hashed).localCheckpoint(true)
+    }
   }
 
   /** One shingle-set row per doc: (doc_id, shingles: distinct STRING
@@ -316,14 +305,10 @@ object DedupOps {
       df.select(col("doc_id"),
         explode(array_distinct(orderedGrams(wordsCol, n))).as("gram"))
     // the gate needs the distinct-gram count before the join plan is
-    // chosen; cache only across that count, then release — the join's
-    // action re-derives the gram set with one extra scan of the SMALL bench
-    // side, where leaving the cache pinned would accumulate ~200 MB of
-    // blocks per decontaminate() call until session end
+    // chosen; the join's action re-derives the gram set with one extra scan
+    // of the SMALL bench side
     val benchGrams = grams(benchmark).select("gram").distinct()
-    benchGrams.cache()
     val nBench = benchGrams.count()
-    benchGrams.unpersist(blocking = false)
     val benchSide =
       if (nBench <= maxBroadcastGrams) broadcast(benchGrams)
       else {

@@ -80,20 +80,22 @@ object ExportImport {
     */
   def compactIds(df: DataFrame, orderCol: String, idName: String = "compact_id"): DataFrame = {
     val spark = df.sparkSession
-    // persist: range partitioning samples its boundaries, so the two passes
-    // below must see one materialization, not two independent samplings
+    // cached: range partitioning samples its boundaries, so the two passes
+    // below must see one materialization, not two independent samplings;
+    // the output is an eager checkpoint, so every consumer sees one id set
     val sorted = df.repartitionByRange(col(orderCol)).sortWithinPartitions(orderCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
-      Iterator((i, it.size.toLong))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val bcOffsets = spark.sparkContext.broadcast(offsets)
-    val schema = StructType(sorted.schema.fields :+ StructField(idName, LongType, nullable = false))
-    val rows = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
-      var k = bcOffsets.value(i)
-      it.map { r => val out = Row.fromSeq(r.toSeq :+ k); k += 1; out }
+    graft.pipeline.DedupPipeline.withCached(sorted) {
+      val counts = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
+        Iterator((i, it.size.toLong))
+      }.collect().sortBy(_._1).map(_._2)
+      val offsets = counts.scanLeft(0L)(_ + _)
+      val bcOffsets = spark.sparkContext.broadcast(offsets)
+      val schema = StructType(sorted.schema.fields :+ StructField(idName, LongType, nullable = false))
+      val rows = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
+        var k = bcOffsets.value(i)
+        it.map { r => val out = Row.fromSeq(r.toSeq :+ k); k += 1; out }
+      }
+      spark.createDataFrame(rows, schema).localCheckpoint(true)
     }
-    spark.createDataFrame(rows, schema)
   }
 }

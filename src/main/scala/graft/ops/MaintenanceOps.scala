@@ -97,9 +97,9 @@ object MaintenanceOps {
     val m = renames.toSeq.toDF("url", "new_url")
     // doc_id rekey map for the derived tables, from the ORIGINAL sigs —
     // rename-sized (≤ |renames|, a driver-side admin map), so it lives as a
-    // driver-side array rather than a cached DataFrame (a .cache() here
-    // pins a table for the session lifetime with no unpersist point: the
-    // outputs are returned lazily)
+    // driver-side array rather than a cached DataFrame (a cache here would
+    // stay pinned for the session: the outputs are returned lazily, so no
+    // point exists at which to release it)
     val idMapRows = sigs.join(broadcast(m), Seq("url"))
       .select(col("doc_id"), newIdUdf(col("new_url")).as("new_doc_id"))
       .as[(Long, Long)].collect()

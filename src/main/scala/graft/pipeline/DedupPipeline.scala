@@ -494,20 +494,15 @@ final class DedupPipeline(
   /** What one producer call yields: the exact channel's edges (src, dst)
     * and the LSH channel's verified pairs (a, b, score, hamming, n_bands,
     * jaccard — the stored schema of the "verified" ledger stage; jaccard is
-    * null unless the caller passed text). Both tables are lazy. A staged
-    * producer's one ephemeral checkpoint, the shared rep table, stays
-    * pinned until `release()`, which a caller invokes once every consumer
-    * of both tables has materialized; an unstaged producer holds none, and
-    * `release()` is a no-op.
+    * null unless the caller passed text). Both tables are lazy and pin
+    * nothing: unstaged they are plans over the caller's signature table,
+    * staged they read the ledger's committed stage tables.
     */
-  private[graft] final class PairGraph(val exactEdges: DataFrame, val verified: DataFrame,
-      repCheckpoint: Option[DataFrame]) {
+  private[graft] final class PairGraph(val exactEdges: DataFrame, val verified: DataFrame) {
     /** Both channels in one (src, dst, score, hamming, flags) table. */
     def pairs: DataFrame = DedupPipeline.unionDisjointChannels(
       verified.select(col("a").as("src"), col("b").as("dst"), col("score"), col("hamming")),
       exactEdges)
-
-    def release(): Unit = repCheckpoint.foreach(DedupPipeline.releaseCheckpoint)
   }
 
   /** `f` as ledger stage `name` when `stages` is set, plain otherwise. */
@@ -527,17 +522,16 @@ final class DedupPipeline(
     *  - The rep table feeds the exact edges and the band table. Unstaged
     *    (`run()` without a ledger, `dupPairs`, `dupPairsFromSigs`,
     *    `minhashPairs`) both channels are consumed in ONE plan, so the rep
-    *    table is not checkpointed. Each channel then plans its own narrow
+    *    table is not cached. Each channel then plans its own narrow
     *    rep aggregate (doc_id and the two hashes of the has_exact rows):
     *    AQE does not reuse an exchange that sits above a cached-table stage
     *    (without AQE the two are one `ReusedExchange`). The benchmark got
     *    faster with the second map stage than with the checkpoint's extra
     *    job and stored blocks (BENCH.md, round 8).
     *  - Staged, the ledger writes `exact_edges` and `bands` in separate
-    *    actions, so the rep table is `localCheckpoint`ed and the second
-    *    write reuses its blocks (`release()` drops them). That checkpoint
-    *    is "lazy" in name only: under AQE, `localCheckpoint(eager = false)`
-    *    still runs the rep exchange as a job when it is called.
+    *    actions, so the rep table is cached (`withCached`) across all four
+    *    stage writes, which all happen inside this call: the first write
+    *    fills it, the second reuses it, and it is released before return.
     *  - `stages` wraps each step in its ledger stage (names, descriptors
     *    and stored schemas are the resume contract) and co-locates the
     *    persisted band table by band key (`TableStore.bandLayout`, the
@@ -548,20 +542,21 @@ final class DedupPipeline(
     */
   private[graft] def pairGraph(sigs0: DataFrame, stages: Option[Ledger] = None,
       text: Option[DataFrame] = None): PairGraph = {
-    val reps0 = exactGroups(sigs0)._1
-    val repCheckpoint = stages.map(_ => reps0.localCheckpoint(eager = false))
-    val reps = repCheckpoint.getOrElse(reps0)
-    val exactEdges = stage(stages, "exact_edges", "", Seq("signatures")) {
-      exactGroups(sigs0, Some(reps))._2
+    val reps = exactGroups(sigs0)._1
+    def graph: PairGraph = {
+      val exactEdges = stage(stages, "exact_edges", "", Seq("signatures")) {
+        exactGroups(sigs0, Some(reps))._2
+      }
+      val bandTable = stage(stages, "bands",
+          s"bands=${cfg.bands},sh=${opts.simHashChannel},shmax=${opts.simHashMaxHamming},bandsv=2",
+          Seq("signatures")) {
+        val all = repBandTable(sigs0, Some(reps))
+        if (stages.isEmpty) all else graft.storage.TableStore.bandLayout(all)
+      }
+      new PairGraph(exactEdges,
+        pairTail(bandTable, sigs0.where(col("hashable")), stages, text, identity))
     }
-    val bandTable = stage(stages, "bands",
-        s"bands=${cfg.bands},sh=${opts.simHashChannel},shmax=${opts.simHashMaxHamming},bandsv=2",
-        Seq("signatures")) {
-      val all = repBandTable(sigs0, Some(reps))
-      if (stages.isEmpty) all else graft.storage.TableStore.bandLayout(all)
-    }
-    new PairGraph(exactEdges,
-      pairTail(bandTable, sigs0.where(col("hashable")), stages, text, identity), repCheckpoint)
+    if (stages.isEmpty) graph else DedupPipeline.withCached(reps)(graph)
   }
 
   /** The producer's candidate → verify tail over a band table: the
@@ -599,27 +594,28 @@ final class DedupPipeline(
     */
   def run(input: DataFrame, fromHtml: Boolean = true): DataFrame = {
     val docs = extractStage(input, fromHtml)
-    // cache the FULL signature table: it feeds banding, verification and the
-    // final assignment join — without this the typed signature pass (the
-    // dominant CPU cost) would run twice. ids=2: the stored table carries
+    // the FULL signature table feeds the audit, banding, verification and
+    // the final assignment join. ids=2: the stored table carries
     // collapseById's re-keyed ids (a table stored without them would pass
     // the audit unrepaired).
-    val sigs0 = auditedIds(stage(ledger, "signatures", s"fromHtml=$fromHtml,ids=2", Nil) {
+    val sigs = stage(ledger, "signatures", s"fromHtml=$fromHtml,ids=2", Nil) {
       signatureStage(docs).toDF()
-    }.cache())
-    val graph = pairGraph(sigs0, ledger, jaccardText(docs))
-    val edges = graph.exactEdges.select("src", "dst")
-      .unionByName(graph.verified.select(col("a").as("src"), col("b").as("dst")))
-    val components = stage(ledger, "components", "", Seq("verified")) {
-      ConnectedComponents.run(edges)
     }
-    // CC collected its edges: both channels materialized
-    graph.release()
-    // every doc: component if present, else itself
-    sigs0.select("url", "doc_id")
-      .join(components.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .withColumn("cluster_id", coalesce(col("component"), col("doc_id")))
-      .select("url", "doc_id", "cluster_id")
+    DedupPipeline.withCached(sigs) {
+      val sigs0 = auditedIds(sigs)
+      val graph = pairGraph(sigs0, ledger, jaccardText(docs))
+      val edges = graph.exactEdges.select("src", "dst")
+        .unionByName(graph.verified.select(col("a").as("src"), col("b").as("dst")))
+      val components = stage(ledger, "components", "", Seq("verified")) {
+        ConnectedComponents.run(edges)
+      }
+      // every doc: component if present, else itself
+      sigs0.select("url", "doc_id")
+        .join(components.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
+        .withColumn("cluster_id", coalesce(col("component"), col("doc_id")))
+        .select("url", "doc_id", "cluster_id")
+        .localCheckpoint(true)
+    }
   }
 
   /** `run()`'s doc_id audit of a url-unique signature table (S1 output).
@@ -639,12 +635,10 @@ final class DedupPipeline(
     * Jaccard-verified under `opts.jaccardVerify` exactly as in `run()`. */
   def dupPairs(input: DataFrame, fromHtml: Boolean = true): DataFrame = {
     val docs = extractStage(input, fromHtml)
-    val sigs0 = signatureStage(docs).toDF().cache()
-    // eager cut-over: verified pairs are cap-bounded and small; release the
-    // signature cache instead of pinning it per call
-    val out = pairGraph(sigs0, text = jaccardText(docs)).pairs.localCheckpoint(true)
-    sigs0.unpersist()
-    out
+    val sigs0 = signatureStage(docs).toDF()
+    DedupPipeline.withCached(sigs0) {
+      pairGraph(sigs0, text = jaccardText(docs)).pairs.localCheckpoint(true)
+    }
   }
 
   /** As `dupPairs` (without Jaccard verification), over a precomputed
@@ -755,7 +749,7 @@ final class DedupPipeline(
       exactEdges,
       newBands.select("doc_id", "band_id", "band_hash"),
       replacedOldReps,
-      new PairGraph(exactEdges, verified, None).pairs)
+      new PairGraph(exactEdges, verified).pairs)
   }
 }
 
@@ -946,12 +940,18 @@ object DedupPipeline {
     l.unionByName(e)
   }
 
-  /** Drops the blocks behind a `localCheckpoint`ed frame; a no-op for any
-    * other frame (e.g. a ledger stage read back from storage). Only call it
-    * once every consumer of `df` has materialized. */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
+  /** The one materialization rule. A surface that reads an intermediate in
+    * more than one action caches it only here: each frame is cached (the
+    * default MEMORY_AND_DISK, in argument order, so a later frame's cache
+    * reads an earlier one's), `body` runs, and every frame is unpersisted
+    * in a `finally`, whether `body` returns or throws. So nothing `body`
+    * returns may read the frames lazily: it returns a plain value or an
+    * eager `localCheckpoint`, whose blocks are the caller's. A surface that
+    * caches nothing returns a lazy plan for its caller to materialize once
+    * (`dupPairsFromSigs`, `probeParts`, `pairsFromBands`).
+    */
+  def withCached[T](frames: DataFrame*)(body: => T): T = {
+    frames.foreach(_.cache())
+    try body finally frames.foreach(_.unpersist())
+  }
 }

@@ -128,7 +128,6 @@ object SpanDedup {
         (id, t, h)
       }
       .toDF("doc_id", "tokens", "hashes")
-      .cache()
 
     val hashed = tok.select(col("doc_id"), col("hashes"))
       .where(size(col("hashes")) >= window)
@@ -173,10 +172,6 @@ object SpanDedup {
         (id, keep.toString, tokens.length.toLong, removed.toLong)
       }
       .toDF("doc_id", "text_clean", "n_tokens", "n_removed")
-      // eager cut-over: materialize before dropping the token cache so a
-      // re-evaluation after unpersist cannot re-tokenize the corpus
-      .localCheckpoint(true)
-    tok.unpersist()
-    out
+    graft.pipeline.DedupPipeline.withCached(tok)(out.localCheckpoint(true))
   }
 }

@@ -133,7 +133,6 @@ object SubstringStage {
       .map { case (id, text) => (id, tokenHashes(text)) }
       .toDF("doc_id", "hashes")
       .where(size(col("hashes")) >= window)
-      .cache()
 
     val pairs = candidatePairs(spark, hashed, window, winnow, maxAnchorGroup)
 
@@ -150,10 +149,6 @@ object SubstringStage {
       }
       .toDF("doc_id_a", "doc_id_b", "run_tokens", "offset_a", "offset_b")
       .where(col("run_tokens") >= mr)
-      // eager cut-over: the verified-run output is tiny, and dropping the
-      // token-hash cache NOW avoids leaking one pinned array table per call
-      .localCheckpoint(true)
-    hashed.unpersist()
-    out
+    graft.pipeline.DedupPipeline.withCached(hashed)(out.localCheckpoint(true))
   }
 }

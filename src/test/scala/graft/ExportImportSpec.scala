@@ -33,12 +33,19 @@ class ExportImportSpec extends SparkTestBase {
 
   test("compactIds: dense 0..n-1, deterministic by order column") {
     val df = (1 to 97).map(i => (s"k${1000 - i}", i)).toDF("k", "v")
-    val withIds = ExportImport.compactIds(df, "k").cache()
+    val entries = cachedEntries
+    val withIds = ExportImport.compactIds(df, "k")
+    assert(cachedEntries == entries, "compactIds leaves nothing in the CacheManager")
     val ids = withIds.select("compact_id").as[Long].collect().sorted
     assert(ids.toSeq == (0L until 97L))
     // id order follows sort order of the key
     val byId = withIds.orderBy("compact_id").select("k").as[String].collect()
     assert(byId.toSeq == byId.sorted.toSeq)
+    // two separate actions on the output see one id assignment
+    def idOf: Map[String, Long] =
+      withIds.select("k", "compact_id").as[(String, Long)].collect().toMap
+    val first = idOf
+    assert(idOf == first && first.values.toSeq.sorted == (0L until 97L))
   }
 
   test("mega skew clusters flow through the exact channel and cluster correctly") {

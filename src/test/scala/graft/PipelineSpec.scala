@@ -296,7 +296,7 @@ class DedupPipelineSpec extends SparkTestBase {
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
       val g = rows(got)
       assert(g.nonEmpty && g == rows(ref), s"bandsOf differs under $opts")
-      DedupPipeline.releaseCheckpoint(sigs)
+      releaseCheckpoint(sigs)
     }
   }
 
@@ -426,25 +426,22 @@ class DedupPipelineSpec extends SparkTestBase {
     val corpus = CorpusGen.generate(spark, sf = 0.003, seed = 11L).cache()
     corpus.count()
     val pipe = new DedupPipeline(spark)
-    // ids of the persistent-RDD registry, not getRDDStorageInfo: the latter
-    // reads the listener-fed status store, which lags block updates, while
-    // unpersist removes an RDD from the registry synchronously. Only NEW ids
-    // count — the context cleaner may drop older unreachable ones any time.
-    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val beforePairs = persisted
+    val beforePairs = persistedIds
     val pairs = pipe.dupPairs(corpus, fromHtml = true)
-    assert((persisted -- beforePairs).size == 1, "dupPairs keeps only its returned checkpoint")
-    val beforeRun = persisted
+    assert((persistedIds -- beforePairs).size == 1, "dupPairs keeps only its returned checkpoint")
+    val beforeRun = persistedIds
+    val entriesBeforeRun = cachedEntries
     val clusters = pipe.run(corpus, fromHtml = true)
     clusters.count()
-    assert((persisted -- beforeRun).size == 1,
-      "run keeps only the signature cache its returned assignment reads")
+    assert((persistedIds -- beforeRun) == checkpointIds(clusters) && checkpointIds(clusters).size == 1,
+      "run keeps only its returned assignment checkpoint")
+    assert(cachedEntries == entriesBeforeRun, "run leaves no signature table in the CacheManager")
     assert(pairs.count() > 0 && clusters.count() > 0)
     // the operator surface over the same producer
     val docs = corpus.select(xxhash64(col("url")).as("doc_id"), col("text"))
-    val beforeMinhash = persisted
+    val beforeMinhash = persistedIds
     val mhPairs = graft.ops.DedupOps.minhashPairs(spark, docs)
-    assert((persisted -- beforeMinhash).size == 1,
+    assert((persistedIds -- beforeMinhash).size == 1,
       "minhashPairs keeps only its returned checkpoint")
     assert(mhPairs.count() > 0)
     // the probe: a lazy frame that pins nothing once its output is counted
@@ -452,11 +449,11 @@ class DedupPipelineSpec extends SparkTestBase {
       .localCheckpoint(eager = true)
     val oldSigs = sigs.where(pmod(col("doc_id"), lit(4)) =!= 0)
     val newSigs = sigs.where(pmod(col("doc_id"), lit(4)) === 0)
-    val beforeProbe = persisted
+    val beforeProbe = persistedIds
     val probed = pipe.probeParts(oldSigs, newSigs, pipe.repBandTable(oldSigs)).pairs
     assert(probed.count() > 0)
-    assert((persisted -- beforeProbe).isEmpty, "the probe pins nothing")
-    DedupPipeline.releaseCheckpoint(sigs)
+    assert((persistedIds -- beforeProbe).isEmpty, "the probe pins nothing")
+    releaseCheckpoint(sigs)
     corpus.unpersist()
   }
 
